@@ -14,6 +14,16 @@ same logical plans survive a 1000-executor / 100 TB deployment:
 - Session timezone pinned to UTC so timestamp semantics (date_trunc,
   window()) agree with the UTC-instant parquet testdata and the DuckDB
   oracle regardless of machine TZ.
+- Streaming checkpoints go through
+  ``FileSystemBasedCheckpointFileManager``. Spark's default manager
+  writes the offset, commit and source logs through Hadoop's
+  ``FileContext``; without the native libhadoop, the local
+  ``FileContext`` forks ``readlink``/``chmod`` processes for every
+  metadata-log write, dozens per micro-batch. The FileSystem-API
+  manager is Spark's own fallback for filesystems without
+  ``FileContext`` support: it keeps the ``.crc`` checksums and the
+  temp-file-then-rename commit but renames in-process, so only the
+  ``chmod`` of file creation still forks.
 """
 
 from __future__ import annotations
@@ -71,6 +81,11 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -67,6 +67,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mysql_to_clickhouse_spark.tables import _ship_package
+
 MAGIC = b"\xfebin"
 
 QUERY_EVENT = 2
@@ -774,6 +776,7 @@ def read_binlog(spark: SparkSession, path: str,
     read, the partition-pruning shape), the start file itself skips
     rows events whose end-position is <= start_pos, and later
     rotations decode in full."""
+    _ship_package(spark)
     decode, out_schema = _decoder(col_names, col_types,
                                   start_file, start_pos, unsigned_cols)
     files = spark.read.format("binaryFile").load(path)
@@ -813,6 +816,7 @@ def read_binlog_stream(spark: SparkSession, path: str,
     cannot infer). Downstream, pair with a foreachBatch latest-wins
     merge ordered by (log_file, log_pos, seq) — a35c_binlog_stream is
     the end-to-end operator, streaming/cdc.py the state discipline."""
+    _ship_package(spark)
     files = (
         spark.readStream.format("binaryFile")
         .schema(_BINARYFILE_SCHEMA)

@@ -21,6 +21,14 @@ restart with the same checkpointLocation: no duplicate, no lost row.
 This is proven across a query restart in
 tests/test_streaming.py::test_cdc_checkpoint_kill_and_resume.
 
+SCHEMA FROM THE COMMITTED FOOTER: every read of a state version (the
+previous state inside a merge, and the FINAL read) takes its schema
+from that version's own parquet footer, where Spark records the
+writing DataFrame's schema under
+``org.apache.spark.sql.parquet.row.metadata``. pyarrow reads that key
+on the driver, so building the read launches no schema-inference job,
+which on a micro-batch loop would be a fixed cost of every batch.
+
 At scale the state store would be a partitioned table (or Delta/
 Iceberg MERGE) and version discovery a manifest/log read instead of a
 directory listing; the micro-batch merge below is partition-pruned by
@@ -29,19 +37,26 @@ PK range the same way.
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
+
+import pyarrow.parquet as pq
 
 from mysql_to_clickhouse_spark.functions.tmputil import scratch_dir
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mysql_to_clickhouse_spark.streaming.replay import write_replay_slices
 
 
-def _latest_per_key(df: DataFrame) -> DataFrame:
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts_us"), F.desc("event_id"))
+def _latest_per_key(
+    df: DataFrame, order: tuple[str, ...] = ("ts_us", "event_id")
+) -> DataFrame:
+    """Latest row per user_id, newest first by ``order``."""
+    w = Window.partitionBy("user_id").orderBy(*(F.desc(c) for c in order))
     return (
         df.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
@@ -63,12 +78,46 @@ def _committed_versions(state_root: str) -> list[int]:
     return sorted(out)
 
 
-def make_cdc_apply(state_root: str, fail_at_batch: int | None = None):
-    """foreachBatch merge closure over a versioned parquet state root.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
-    Idempotent per batch_id: previous state = largest committed version
-    < batch_id (so a re-delivered batch never reads its own partial
-    output), written with overwrite to v{batch_id}. ``fail_at_batch``
+
+def _read_version(spark: SparkSession, state_root: str, version: int) -> DataFrame:
+    """Read committed state version ``v{version}`` with the schema its
+    own parquet footer records, so no schema-inference job runs. Every
+    part file of a version carries the same schema; any one will do."""
+    vdir = os.path.join(state_root, f"v{version}")
+    part = min(f for f in os.listdir(vdir) if f.endswith(".parquet"))
+    meta = pq.read_metadata(os.path.join(vdir, part)).metadata
+    schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(vdir)
+
+
+def _read_latest(spark: SparkSession, state_root: str) -> DataFrame:
+    versions = _committed_versions(state_root)
+    if not versions:
+        raise FileNotFoundError(f"no committed state under {state_root}")
+    return _read_version(spark, state_root, versions[-1])
+
+
+def _merge_commit(
+    state_root: str, batch: DataFrame, batch_id: int, order: tuple[str, ...]
+) -> None:
+    """Union ``batch`` into the largest committed version strictly below
+    ``batch_id`` (so a re-delivered batch never reads its own partial
+    output), keep the latest row per key by ``order``, and write the
+    result with overwrite to ``v{batch_id}``."""
+    prior = [v for v in _committed_versions(state_root) if v < batch_id]
+    if prior:
+        prev = _read_version(batch.sparkSession, state_root, max(prior))
+        batch = prev.unionByName(batch)
+    _latest_per_key(batch, order).write.mode("overwrite").parquet(
+        os.path.join(state_root, f"v{batch_id}")
+    )
+
+
+def make_cdc_apply(state_root: str, fail_at_batch: int | None = None):
+    """foreachBatch merge closure over a versioned parquet state root,
+    idempotent per batch_id (``_merge_commit``). ``fail_at_batch``
     injects a crash BEFORE the write — the kill half of the
     kill-and-resume recovery test."""
 
@@ -82,17 +131,7 @@ def make_cdc_apply(state_root: str, fail_at_batch: int | None = None):
             "event_type",
             "value",
         )
-        prior = [v for v in _committed_versions(state_root) if v < batch_id]
-        if prior:
-            prev = batch.sparkSession.read.parquet(
-                os.path.join(state_root, f"v{max(prior)}")
-            )
-            merged = _latest_per_key(prev.unionByName(batch))
-        else:
-            merged = _latest_per_key(batch)
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"v{batch_id}")
-        )
+        _merge_commit(state_root, batch, batch_id, ("ts_us", "event_id"))
 
     return apply_batch
 
@@ -124,10 +163,7 @@ def start_cdc_query(
 def read_cdc_state(spark: SparkSession, state_root: str) -> DataFrame:
     """FINAL read of the latest committed state version: latest
     non-tombstone row per PK."""
-    versions = _committed_versions(state_root)
-    if not versions:
-        raise FileNotFoundError(f"no committed CDC state under {state_root}")
-    final = spark.read.parquet(os.path.join(state_root, f"v{versions[-1]}"))
+    final = _read_latest(spark, state_root)
     return final.filter(F.col("event_type") != "error").select(
         "user_id", "event_id", "ts_us", "event_type", "value"
     )
@@ -163,17 +199,6 @@ _BINLOG_COLS = [
 ]
 
 
-def _latest_per_key_binlog(df: DataFrame) -> DataFrame:
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("log_file"), F.desc("log_pos"), F.desc("seq")
-    )
-    return (
-        df.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
 def make_binlog_apply(state_root: str):
     """foreachBatch merge for a decoded binlog stream: latest row per
     PK in LOG order, deletes kept as tombstones in state (filtered on
@@ -181,17 +206,9 @@ def make_binlog_apply(state_root: str):
     commit protocol as make_cdc_apply."""
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.select(*_BINLOG_COLS)
-        prior = [v for v in _committed_versions(state_root) if v < batch_id]
-        if prior:
-            prev = batch.sparkSession.read.parquet(
-                os.path.join(state_root, f"v{max(prior)}")
-            )
-            merged = _latest_per_key_binlog(prev.unionByName(batch))
-        else:
-            merged = _latest_per_key_binlog(batch)
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"v{batch_id}")
+        _merge_commit(
+            state_root, batch.select(*_BINLOG_COLS), batch_id,
+            ("log_file", "log_pos", "seq"),
         )
 
     return apply_batch
@@ -200,10 +217,7 @@ def make_binlog_apply(state_root: str):
 def read_binlog_state(spark: SparkSession, state_root: str) -> DataFrame:
     """FINAL read over the binlog-apply state: latest committed
     version, tombstones dropped."""
-    versions = _committed_versions(state_root)
-    if not versions:
-        raise FileNotFoundError(f"no committed state under {state_root}")
-    final = spark.read.parquet(os.path.join(state_root, f"v{versions[-1]}"))
+    final = _read_latest(spark, state_root)
     return final.filter(F.col("op") != "delete").select(
         "user_id", "event_id", "ts_us", "event_type", "value"
     )

@@ -372,3 +372,38 @@ def test_streaming_tail_honors_unsigned_flags(spark, tmp_path):
 
     assert drain(flags) == [big]
     assert drain(None) == [big - (1 << 64)]  # signed misread, the bug
+
+
+def test_read_binlog_decodes_from_any_cwd(tmp_path):
+    """The decode closure runs on Python workers, which import this
+    package by name. A fresh process whose cwd is not the repo root has
+    no such module on its workers unless the reader ships the package
+    zip itself, so decode one rotation from exactly that process."""
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    write_binlog(str(tmp_path / "binlog.000001"), TS,
+                 [("insert", (1, "a", 1.0)), ("delete", (1, "a", 1.0))])
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from mysql_to_clickhouse_spark.session import build_session
+        from mysql_to_clickhouse_spark.sources.binlog import read_binlog
+        spark = build_session(app_name="any_cwd", master="local[1]")
+        rows = read_binlog(spark, {str(tmp_path)!r}, ["pk", "name", "v"],
+                           ["long", "string", "double"]).collect()
+        print(sorted(r["op"] for r in rows))
+        spark.stop()
+    """)
+    # the package must reach the workers through the reader, never
+    # through an inherited PYTHONPATH
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == "['delete', 'insert']"

@@ -4,6 +4,8 @@ once drained."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -311,3 +313,71 @@ def test_left_outer_stream_emits_unmatched_views(spark):
         .count()
     )
     assert pdf["view_event_id"].nunique() == n_views
+
+
+def test_final_read_builds_without_spark_job(spark, tmp_path):
+    """Building a FINAL read takes the schema from the latest state
+    version's own parquet footer, so it launches no Spark job (an
+    inferred read runs one schema-inference job), and it yields the
+    same schema and rows as a plain inferred read of that version —
+    also when that version holds only tombstones."""
+    from datetime import datetime, timedelta
+
+    from pyspark.sql import functions as F
+
+    from mysql_to_clickhouse_spark.streaming.cdc import (
+        make_binlog_apply,
+        make_cdc_apply,
+        read_binlog_state,
+        read_cdc_state,
+    )
+
+    binlog_schema = (
+        "log_file string, log_pos long, seq long, op string, user_id long, "
+        "event_id long, ts_us long, event_type string, value double"
+    )
+    cdc_schema = (
+        "user_id long, event_id long, ts timestamp, event_type string, "
+        "value double"
+    )
+    t0 = datetime(2024, 1, 1)
+    # batch 0 inserts two keys; batch 1 tombstones both, so the latest
+    # version of each state holds only tombstones
+    binlog_batches = [
+        [("binlog.000001", 100, u, "insert", u, u, 1, "view", 1.5)
+         for u in (1, 2)],
+        [("binlog.000002", 100, u, "delete", u, u, 1, "view", 1.5)
+         for u in (1, 2)],
+    ]
+    cdc_batches = [
+        [(u, u, t0, "view", 1.5) for u in (1, 2)],
+        [(u, 10 + u, t0 + timedelta(seconds=1), "error", 0.0)
+         for u in (1, 2)],
+    ]
+    cases = [
+        ("binlog", make_binlog_apply, read_binlog_state, binlog_schema,
+         binlog_batches, F.col("op") != "delete"),
+        ("cdc", make_cdc_apply, read_cdc_state, cdc_schema,
+         cdc_batches, F.col("event_type") != "error"),
+    ]
+    sc = spark.sparkContext
+    for name, make_apply, read_state, schema, batches, live in cases:
+        root = str(tmp_path / name)
+        os.makedirs(root)
+        apply = make_apply(root)
+        for batch_id, rows in enumerate(batches):
+            apply(spark.createDataFrame(rows, schema), batch_id)
+            group = f"final_read_{name}_{batch_id}"
+            sc.setJobGroup(group, "build the FINAL read")
+            try:
+                final = read_state(spark, root)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+            plain = spark.read.parquet(os.path.join(root, f"v{batch_id}"))
+            plain = plain.filter(live).select(*final.columns)
+            assert final.schema == plain.schema
+            got = sorted(map(tuple, final.collect()))
+            assert got == sorted(map(tuple, plain.collect()))
+            assert len(got) == (2 if batch_id == 0 else 0)
