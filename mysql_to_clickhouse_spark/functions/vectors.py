@@ -13,7 +13,7 @@ Scale ranges (dim-64, elements |x| ≲ 1): dot at 1e12 → per-term ≤ 1e12,
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 Q_SCALE = 1e6  # element quantization: floor(x * 1e6) → int
@@ -108,6 +108,17 @@ def o_cosine(a: str, b: str, dim: int = 64) -> str:
     return (
         f"(CAST({o_fixed_dot(a, b, dim)} AS DOUBLE) / {DOT_SCALE!r})"
         f" / ({o_q_norm(a, dim)} * {o_q_norm(b, dim)})"
+    )
+
+
+def rank_topk(cand: DataFrame, k: int) -> DataFrame:
+    """Top-k neighbors per ``id_a`` from ``(id_a, id_b, cos_sim)``
+    candidates: a bigint ``rk`` by the similarity family's one total
+    order (cos_sim desc, id_b asc), kept while ``rk ≤ k``. Every oracle
+    states the same ROW_NUMBER order, so exact ties rank identically."""
+    w = Window.partitionBy("id_a").orderBy(F.desc("cos_sim"), F.asc("id_b"))
+    return cand.withColumn("rk", F.row_number().over(w).cast("long")).filter(
+        F.col("rk") <= k
     )
 
 

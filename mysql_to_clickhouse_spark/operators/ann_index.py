@@ -45,7 +45,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mysql_to_clickhouse_spark.functions.vectors import cosine
+from mysql_to_clickhouse_spark.functions.vectors import cosine, rank_topk
 from mysql_to_clickhouse_spark.registry import register
 from mysql_to_clickhouse_spark.tables import load
 
@@ -271,11 +271,7 @@ def ivf_query(
         .withColumn("cos_sim", cosine("ea", "eb"))
         .select("id_a", "id_b", "cos_sim")
     )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cos_sim"), F.asc("id_b"))
-    return (
-        cand.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-    )
+    return rank_topk(cand, k)
 
 
 _SCRATCH_INDEX_DIRS: dict[str, str] = {}

@@ -44,6 +44,7 @@ from mysql_to_clickhouse_spark.functions.vectors import (
     o_cosine,
     o_l2_norm,
     o_quantized,
+    rank_topk,
 )
 from mysql_to_clickhouse_spark.plans.prefix import running_sums
 from mysql_to_clickhouse_spark.registry import register
@@ -486,8 +487,6 @@ ORDER BY id_a, id_b
 """
 
 
-import weakref as _weakref
-
 _MATRIX_CACHE: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
     _weakref.WeakKeyDictionary()
 )
@@ -495,36 +494,22 @@ _MATRIX_CACHE: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
 
 def _broadcast_matrix(spark: SparkSession, emb: DataFrame, sf_dir: str):
     """Collect the embedding table once (vec_id-sorted) and broadcast
-    (ids, float64 matrix, exact norms) to every task.
+    (ids, quantized matrix, exact norms) to every task — the fixed side
+    of ``_cosine_tiles``' "table" topology.
 
     Scale note: at testbed/embedding-table sizes (≤ a few 1e5 × small
     dim) broadcasting the matrix is THE right plan — every partition
     scans its own rows against the broadcast side with zero shuffle
     (a broadcast nested-loop specialized to matrix arithmetic). When
-    the table outgrows a broadcast, switch to the block-matrix join:
-    cross-join of row-blocks × col-blocks on block ids — same kernel,
-    one extra shuffle."""
-    import numpy as np
-
-    from mysql_to_clickhouse_spark.functions.vectors import (
-        np_fixed_norms,
-        np_quantize,
-    )
-
+    the table outgrows a broadcast, the "blocked" topology runs the
+    same kernel over a block-matrix cogroup — one extra shuffle."""
     # one collect + broadcast per (session, table); repeated i3/i4/i8
     # invocations reuse it instead of leaking broadcast blocks
     per_session = _MATRIX_CACHE.setdefault(spark, {})
-    if sf_dir in per_session:
-        return per_session[sf_dir]
-    rows = sorted(
-        emb.select("vec_id", "embedding").collect(), key=lambda r: r["vec_id"]
-    )
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    quant = np_quantize(np.array([r["embedding"] for r in rows], dtype=np.float64))
-    norms = np_fixed_norms(quant)
-    bc = spark.sparkContext.broadcast((ids, quant, norms))
-    per_session[sf_dir] = bc
-    return bc
+    if sf_dir not in per_session:
+        pdf = emb.select("vec_id", "embedding").toPandas().sort_values("vec_id")
+        per_session[sf_dir] = spark.sparkContext.broadcast(_np_block(pdf))
+    return per_session[sf_dir]
 
 
 def _np_topk_sel(cos_w, ids, k):
@@ -586,13 +571,13 @@ _CHUNK_CELLS_DEFAULT = 16_000_000  # ~128 MB of float64 per live matrix
 
 
 def _chunk_rows_for(spark: SparkSession, n_table: int) -> int:
-    """Query-side rows per kernel call so the nq×n cosine matrix (plus
+    """Streamed rows per kernel call so the tile's cosine matrix (plus
     its masked copy and the dgemm intermediate) stays bounded per
     worker REGARDLESS of the Arrow batch size. Without this, the
     default 10k-row Arrow batch against a 20k-vector broadcast makes
     every worker hold multiple multi-GB matrices — 32 concurrent
     workers beside a 30 GB JVM OOMed the 1e8-tier bench box. The bound
-    is the broadcast-path twin of the blocked path's
+    is the broadcast topologies' twin of the blocked topology's
     ``spark.mysql2ch.cosine.blocks`` tile pin."""
     cells = int(spark.conf.get(_CHUNK_CELLS_CONF, str(_CHUNK_CELLS_DEFAULT)))
     return max(64, cells // max(n_table, 1))
@@ -609,103 +594,38 @@ def _rechunk(batches, rows: int):
                 yield pdf.iloc[lo : lo + rows]
 
 
-@register("i3_cosine_pairs", oracle=_I3_ORACLE)
-def i3_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (cos ≥ 0.25) over the pair
-    triangle — the exactness baseline that i4b's LSH variant
-    approximates at scale.
-
-    AUTO-DISPATCH: below ``spark.mysql2ch.vector.broadcastThreshold``
-    (Catalyst-estimated table size) this runs as mapInPandas over the
-    broadcast embedding matrix with the exact fixed-point numpy kernel —
-    bit-identical to the declarative zip_with form (i3b) and the DuckDB
-    oracle, zero shuffle. Above it (or with the threshold set ≤ 0) the
-    same kernel runs as the block-matrix cogroup join (i3c's body): one
-    shuffle, nothing collected to the driver, no OOM ceiling."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    from mysql_to_clickhouse_spark.functions.vectors import (
-        np_fixed_cosines,
-        np_fixed_norms,
-        np_quantize,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    if not _use_broadcast_path(spark, emb):
-        return _cosine_pairs_blocked(spark, emb)
-    bc = _broadcast_matrix(spark, emb, sf_dir)
-    chunk = _chunk_rows_for(spark, len(bc.value[0]))
-
-    def pairs_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, quant, norms = bc.value
-        for pdf in _rechunk(batches, chunk):
-            q_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            q_quant = np_quantize(np.array(list(pdf["embedding"]), dtype=np.float64))
-            q_norms = np_fixed_norms(q_quant)
-            cos = np_fixed_cosines(q_quant, q_norms, quant, norms)
-            qi, vj = np.nonzero((cos >= 0.25) & (q_ids[:, None] < ids[None, :]))
-            yield pd.DataFrame(
-                {
-                    "id_a": q_ids[qi],
-                    "id_b": ids[vj],
-                    "cos_sim": cos[qi, vj],
-                }
-            )
-
-    return (
-        _spread(emb.select("vec_id", "embedding"))
-        .mapInPandas(pairs_batches, schema="id_a long, id_b long, cos_sim double")
-
-    )
-
-
-_I3B_ORACLE = f"""
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       {o_cosine('a.embedding', 'b.embedding')} AS cos_sim
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE a.vec_id < 80 AND b.vec_id < 80
-ORDER BY id_a, id_b
-"""
-
-
-@register("i3b_cosine_zipwith", oracle=_I3B_ORACLE)
-def i3b_cosine_zipwith(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pure-DataFrame cosine (zip_with + aggregate lambdas, no
-    Python anywhere), on a bounded id range: proves the declarative
-    form and the i3 numpy kernel produce bit-identical cosines (same
-    oracle arithmetic; lambdas are interpreter-bound, hence bounded)."""
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 80)
-    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", cosine("ea", "eb"))
-        .select("id_a", "id_b", "cos_sim")
-
-    )
-
-
 # ---------------------------------------------------------------------------
-# i3c/i4c — block-matrix cosine (the beyond-broadcast scale path)
+# _cosine_tiles — the one exact-cosine primitive (i3/i3c/i4/i4c/i4e/i8/i28)
 # ---------------------------------------------------------------------------
-# When the vector table outgrows a driver broadcast (i3/i4's fast path),
-# the same quantized kernel runs as a block-matrix join: every vector is
-# hashed into one of b row-blocks; the left side replicates each block
-# across all b column-block ids, the right side vice versa; cogrouped
-# applyInPandas computes each (row-block × col-block) submatrix locally.
-# Communication is O(n·b) rows through ONE shuffle (classic 2D-blocked
-# matmul replication), nothing is ever collected to the driver, and b
-# grows as sqrt(parallelism).
+# Every exact cosine operator is the quantized numpy kernel
+# (functions/vectors.np_fixed_cosines) run over (left rows × right rows)
+# tiles, with an EMITTER turning each tile's cosine matrix into output
+# rows. Left rows are the ones answered (queries, corpus rows); right
+# rows are the candidates. Three topologies:
 #
-# DISPATCH: i3_cosine_pairs / i4_topk_similar auto-select between the
-# broadcast kernel and this blocked path by the Catalyst-estimated size
-# of the embedding table (optimizedPlan stats — file-size based, no
-# driver action) vs ``spark.mysql2ch.vector.broadcastThreshold``. Below
-# the threshold the collect+broadcast kernel wins (zero shuffle); above
-# it the blocked cogroup path runs — identical arithmetic, identical
-# oracle, no driver collect, no OOM ceiling.
+# - "table": the right side is collected once and broadcast
+#   (_broadcast_matrix, cached per session); mapInPandas streams the
+#   spread left side in _chunk_rows_for-bounded slices. Zero shuffle of
+#   pairs; each tile sees every candidate, so a top-k is final.
+# - "queries": the bounded left side (a LIMITed query batch) is
+#   collected and broadcast; the right side is streamed once. Legal at
+#   any corpus size; a top-k is local to each streamed slice.
+# - "blocked": every row hashes into one of b blocks; the left side
+#   replicates each row across all b column-block ids, the right side
+#   vice versa; cogrouped applyInPandas computes each (row-block ×
+#   col-block) tile locally. Communication is O(n·b) rows through ONE
+#   shuffle (classic 2D-blocked matmul replication), nothing is
+#   collected to the driver, and b grows as sqrt(parallelism).
+#
+# Top-k (_cosine_topk) re-ranks with one window ONLY when the candidate
+# side is split across tiles ("queries", "blocked"); local selection and
+# the window share one total order (cos desc, id asc), so every global
+# winner survives its tile.
+#
+# DISPATCH: i3/i4 (and i28's eval side) pick "table" vs "blocked" by
+# the Catalyst-estimated size of the table (optimizedPlan stats —
+# file-size based, no job) vs ``spark.mysql2ch.vector.broadcastThreshold``:
+# identical arithmetic and oracle either way, no OOM ceiling above it.
 
 _COSINE_BLOCKS_CONF = "spark.mysql2ch.cosine.blocks"
 _VECTOR_BC_CONF = "spark.mysql2ch.vector.broadcastThreshold"
@@ -746,30 +666,27 @@ def _n_blocks(spark: SparkSession) -> int:
     return max(2, math.isqrt(width))
 
 
-def _blocked_sides(emb: DataFrame, b: int) -> tuple[DataFrame, DataFrame]:
-    """Left/right replicated block assignments for the 2D-blocked join.
+def _blocked_sides(
+    left: DataFrame, right: DataFrame, b: int
+) -> tuple[DataFrame, DataFrame]:
+    """Replicated block assignments for the 2D-blocked join: a left row
+    keeps its own block as ``ba`` and meets every ``bb``; a right row
+    keeps its own block as ``bb`` and meets every ``ba``.
 
-    A pair (x, y), x.id < y.id, meets exactly once: in cogroup key
-    (x.block, y.block) with x on the left and y on the right (the
-    kernel's id_a < id_b mask drops the mirrored ordering, and same-
-    block pairs meet only in the diagonal group)."""
-    blocks = F.array(*[F.lit(i) for i in range(b)])
+    So each (left, right) pair meets exactly once, in cogroup key
+    (left.block, right.block). For a self-join (the same frame on both
+    sides) the pairs emitter's id_a < id_b mask drops the mirrored
+    ordering, and same-block pairs meet only in the diagonal group."""
+    blocks = F.explode(F.array(*[F.lit(i) for i in range(b)]))
     own = F.pmod(F.xxhash64("vec_id"), F.lit(b)).cast("int")
-    left = emb.select(
-        "vec_id", "embedding",
-        own.alias("ba"),
-        F.explode(blocks).alias("bb"),
+    return (
+        left.select("vec_id", "embedding", own.alias("ba"), blocks.alias("bb")),
+        right.select("vec_id", "embedding", blocks.alias("ba"), own.alias("bb")),
     )
-    right = emb.select(
-        "vec_id", "embedding",
-        F.explode(blocks).alias("ba"),
-        own.alias("bb"),
-    )
-    return left, right
 
 
 def _np_block(pdf):
-    """(ids, quantized matrix, norms) from a cogroup-side pandas frame."""
+    """(ids, quantized matrix, norms) from a (vec_id, embedding) frame."""
     import numpy as np
 
     from mysql_to_clickhouse_spark.functions.vectors import (
@@ -778,42 +695,173 @@ def _np_block(pdf):
     )
 
     ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-    quant = np_quantize(np.array(list(pdf["embedding"]), dtype=np.float64))
+    mat = np.array(list(pdf["embedding"]), dtype=np.float64)
+    quant = np_quantize(mat.reshape(len(ids), -1 if len(ids) else 0))
     return ids, quant, np_fixed_norms(quant)
 
 
-def _cosine_pairs_blocked(spark: SparkSession, emb: DataFrame) -> DataFrame:
-    """Near-dup pairs (cos ≥ 0.25) via the block-matrix cogroup join —
-    i3's arithmetic with no driver-side collect or broadcast."""
-    import numpy as np
+def _cosine_tiles(
+    left: DataFrame,
+    right: DataFrame,
+    emit,
+    schema: str,
+    strategy: str,
+    sf_dir: str | None = None,
+) -> DataFrame:
+    """Run the exact cosine kernel over (left × right) tiles in one of
+    the topologies above ("table", "queries", "blocked") and return the
+    columns ``emit(left_ids, right_ids, cos)`` yields per tile, typed by
+    ``schema``. ``sf_dir`` keys the "table" topology's broadcast cache."""
     import pandas as pd
 
     from mysql_to_clickhouse_spark.functions.vectors import np_fixed_cosines
 
-    left, right = _blocked_sides(emb.select("vec_id", "embedding"), _n_blocks(spark))
+    def tile(lt, rt) -> pd.DataFrame:
+        return pd.DataFrame(emit(lt[0], rt[0], np_fixed_cosines(*lt[1:], *rt[1:])))
 
-    def block_pairs(_key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series(dtype="int64"),
-                "id_b": pd.Series(dtype="int64"),
-                "cos_sim": pd.Series(dtype="float64"),
-            }
-        )
-        if lpdf.empty or rpdf.empty:
-            return empty
-        l_ids, l_q, l_n = _np_block(lpdf)
-        r_ids, r_q, r_n = _np_block(rpdf)
-        cos = np_fixed_cosines(l_q, l_n, r_q, r_n)
-        qi, vj = np.nonzero((cos >= 0.25) & (l_ids[:, None] < r_ids[None, :]))
-        return pd.DataFrame(
-            {"id_a": l_ids[qi], "id_b": r_ids[vj], "cos_sim": cos[qi, vj]}
-        )
+    spark = left.sparkSession
+    left = left.select("vec_id", "embedding")
+    right = right.select("vec_id", "embedding")
+    if strategy == "blocked":
 
+        def block(_key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+            if lpdf.empty or rpdf.empty:  # a block with no rows on one side
+                return pd.DataFrame()
+            return tile(_np_block(lpdf), _np_block(rpdf))
+
+        ls, rs = _blocked_sides(left, right, _n_blocks(spark))
+        return (
+            ls.groupby("ba", "bb")
+            .cogroup(rs.groupby("ba", "bb"))
+            .applyInPandas(block, schema=schema)
+        )
+    table = strategy == "table"
+    if table:
+        stream, bc = _spread(left), _broadcast_matrix(spark, right, sf_dir)
+    else:  # "queries": the caller bounds the left side
+        stream = right
+        bc = spark.sparkContext.broadcast(_np_block(left.toPandas()))
+    chunk = _chunk_rows_for(spark, len(bc.value[0]))
+
+    def stream_tiles(batches):
+        fixed = bc.value
+        for pdf in _rechunk(batches, chunk):
+            if len(pdf) and len(fixed[0]):
+                part = _np_block(pdf)
+                yield tile(part, fixed) if table else tile(fixed, part)
+
+    return stream.mapInPandas(stream_tiles, schema=schema)
+
+
+_PAIRS_SCHEMA = "id_a long, id_b long, cos_sim double"
+
+
+def _pairs_emit(theta: float):
+    """Emitter: every (id_a < id_b) pair of a tile with cos ≥ theta."""
+
+    def emit(l_ids, r_ids, cos):
+        import numpy as np
+
+        qi, vj = np.nonzero((cos >= theta) & (l_ids[:, None] < r_ids[None, :]))
+        return {"id_a": l_ids[qi], "id_b": r_ids[vj], "cos_sim": cos[qi, vj]}
+
+    return emit
+
+
+def _topk_emit(k: int, ranked: bool):
+    """Emitter: each left row's top-k candidates in the tile by
+    (cos desc, id asc), self excluded; with ``ranked`` also the rank
+    (final only when the tile holds every candidate)."""
+
+    def emit(l_ids, r_ids, cos):
+        import numpy as np
+
+        # self-exclusion: locate each left id among the candidate ids
+        # (one argsort, then searchsorted) and mask that cell to -inf
+        order = np.argsort(r_ids)
+        pos = np.minimum(np.searchsorted(r_ids, l_ids, sorter=order), len(r_ids) - 1)
+        self_col = order[pos]
+        hit = r_ids[self_col] == l_ids
+        cos_w = cos.copy()
+        cos_w[np.nonzero(hit)[0], self_col[hit]] = -np.inf
+        sel = _np_topk_sel(cos_w, r_ids, k)
+        nq, k_eff = sel.shape  # k_eff = min(k, n): tiles smaller than k
+        rows = np.repeat(np.arange(nq), k_eff)
+        flat = sel.ravel()
+        # n ≤ k can select the -inf self cell; it sorts last, so
+        # dropping non-finite rows keeps ranks contiguous per row
+        keep = np.isfinite(cos_w[rows, flat])
+        out = {
+            "id_a": np.repeat(l_ids, k_eff)[keep],
+            "id_b": r_ids[flat][keep],
+            "cos_sim": cos[rows, flat][keep],
+        }
+        if ranked:
+            out["rk"] = np.tile(np.arange(1, k_eff + 1, dtype=np.int64), nq)[keep]
+        return out
+
+    return emit
+
+
+def _cosine_topk(
+    left: DataFrame,
+    right: DataFrame,
+    k: int,
+    strategy: str,
+    sf_dir: str | None = None,
+) -> DataFrame:
+    """Exact top-k right-side neighbors per left row (self excluded) as
+    ``id_a, id_b, cos_sim, rk``. "table" tiles see every candidate and
+    rank in place (no window, no exchange); the split topologies emit
+    local top-k candidates and re-rank them with one window."""
+    if strategy == "table":
+        schema = _PAIRS_SCHEMA + ", rk long"
+        return _cosine_tiles(left, right, _topk_emit(k, True), schema, strategy, sf_dir)
+    cand = _cosine_tiles(left, right, _topk_emit(k, False), _PAIRS_SCHEMA, strategy)
+    return rank_topk(cand, k)
+
+
+@register("i3_cosine_pairs", oracle=_I3_ORACLE)
+def i3_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs (cos ≥ 0.25) over the pair
+    triangle — the exactness baseline that i4b's LSH variant
+    approximates at scale.
+
+    AUTO-DISPATCH: below ``spark.mysql2ch.vector.broadcastThreshold``
+    (Catalyst-estimated table size) ``_cosine_tiles`` runs the exact
+    fixed-point numpy kernel in its "table" topology — bit-identical to
+    the declarative zip_with form (i3b) and the DuckDB oracle, zero
+    shuffle of pairs. Above it (or with the threshold set ≤ 0) the same
+    primitive runs "blocked" (i3c): one shuffle, nothing collected to
+    the driver, no OOM ceiling."""
+    emb = load(spark, sf_dir, "embeddings")
+    strategy = "table" if _use_broadcast_path(spark, emb) else "blocked"
+    return _cosine_tiles(emb, emb, _pairs_emit(0.25), _PAIRS_SCHEMA, strategy, sf_dir)
+
+
+_I3B_ORACLE = f"""
+SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+       {o_cosine('a.embedding', 'b.embedding')} AS cos_sim
+FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+WHERE a.vec_id < 80 AND b.vec_id < 80
+ORDER BY id_a, id_b
+"""
+
+
+@register("i3b_cosine_zipwith", oracle=_I3B_ORACLE)
+def i3b_cosine_zipwith(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The pure-DataFrame cosine (zip_with + aggregate lambdas, no
+    Python anywhere), on a bounded id range: proves the declarative
+    form and the i3 numpy kernel produce bit-identical cosines (same
+    oracle arithmetic; lambdas are interpreter-bound, hence bounded)."""
+    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 80)
+    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"))
+    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"))
     return (
-        left.groupby("ba", "bb")
-        .cogroup(right.groupby("ba", "bb"))
-        .applyInPandas(block_pairs, schema="id_a long, id_b long, cos_sim double")
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .withColumn("cos_sim", cosine("ea", "eb"))
+        .select("id_a", "id_b", "cos_sim")
+
     )
 
 
@@ -823,7 +871,8 @@ def i3c_cosine_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic and oracle, but NO driver-side collect or broadcast:
     the escalation path for embedding tables beyond broadcast size
     (what i3 itself dispatches to above the size threshold)."""
-    return _cosine_pairs_blocked(spark, load(spark, sf_dir, "embeddings"))
+    emb = load(spark, sf_dir, "embeddings")
+    return _cosine_tiles(emb, emb, _pairs_emit(0.25), _PAIRS_SCHEMA, "blocked")
 
 
 # ---------------------------------------------------------------------------
@@ -849,131 +898,28 @@ ORDER BY id_a, rk
 
 @register("i4_topk_similar", oracle=_I4_ORACLE)
 def i4_topk_similar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 nearest embeddings per vector via the broadcast-matrix
-    numpy kernel: each partition ranks its own query rows against the
-    broadcast side locally (ties broken by neighbor id with a stable
-    lexsort), so NO shuffle of pairs ever happens — only k rows per
-    query leave the worker.
+    """Top-5 nearest embeddings per vector, exact (``_cosine_topk``).
+
+    In the "table" topology each partition ranks its own query rows
+    against the broadcast matrix locally (ties broken by neighbor id
+    with a stable lexsort), so NO shuffle of pairs ever happens — only
+    k rows per query leave the worker.
 
     AUTO-DISPATCH: same size rule as i3 — beyond
-    ``spark.mysql2ch.vector.broadcastThreshold`` the blocked cogroup
-    path (i4c's body) runs instead: block-local top-k + one window
-    re-rank, no driver collect, same oracle."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    from mysql_to_clickhouse_spark.functions.vectors import (
-        np_fixed_cosines,
-        np_fixed_norms,
-        np_quantize,
-    )
-
+    ``spark.mysql2ch.vector.broadcastThreshold`` the primitive runs
+    "blocked" (i4c): block-local top-k + one window re-rank, no driver
+    collect, same oracle."""
     emb = load(spark, sf_dir, "embeddings")
-    k = 5
-    if not _use_broadcast_path(spark, emb):
-        return _topk_blocked(spark, emb, k)
-    bc = _broadcast_matrix(spark, emb, sf_dir)
-    chunk = _chunk_rows_for(spark, len(bc.value[0]))
-
-    def topk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, quant, norms = bc.value
-        n = len(ids)
-        for pdf in _rechunk(batches, chunk):
-            q_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            q_quant = np_quantize(np.array(list(pdf["embedding"]), dtype=np.float64))
-            q_norms = np_fixed_norms(q_quant)
-            cos = np_fixed_cosines(q_quant, q_norms, quant, norms)
-            nq = len(q_ids)
-            # Self-exclusion: ids is vec_id-sorted, so the self column is
-            # found by searchsorted; mask it to -inf so it never ranks.
-            cos_w = cos.copy()
-            self_pos = np.searchsorted(ids, q_ids)
-            hit = (self_pos < n) & (ids[np.minimum(self_pos, n - 1)] == q_ids)
-            cos_w[np.arange(nq)[hit], self_pos[hit]] = -np.inf
-            sel = _np_topk_sel(cos_w, ids, k)
-            k_eff = sel.shape[1]  # min(k, n): tables smaller than k
-            flat = sel.ravel()
-            rows = np.repeat(np.arange(nq), k_eff)
-            # n ≤ k can select the -inf self column; it sorts last, so
-            # dropping non-finite rows keeps rk contiguous per query
-            keep = np.isfinite(cos_w[rows, flat])
-            yield pd.DataFrame(
-                {
-                    "id_a": np.repeat(q_ids, k_eff)[keep],
-                    "id_b": ids[flat][keep],
-                    "cos_sim": cos[rows, flat][keep],
-                    "rk": np.tile(np.arange(1, k_eff + 1, dtype=np.int64), nq)[keep],
-                }
-            )
-
-    return (
-        _spread(emb.select("vec_id", "embedding"))
-        .mapInPandas(
-            topk_batches,
-            schema="id_a long, id_b long, cos_sim double, rk long",
-        )
-
-    )
-
-
-def _topk_blocked(spark: SparkSession, emb: DataFrame, k: int) -> DataFrame:
-    """Exact top-k neighbors via the block-matrix join: each
-    (row-block × col-block) group emits its LOCAL top-k per query row
-    (by the global total order cos desc, id asc — so every global
-    winner survives its block), then one window re-ranks the ≤ k·b
-    candidates per id. No driver collect/broadcast; i4's oracle."""
-    import numpy as np
-    import pandas as pd
-
-    from mysql_to_clickhouse_spark.functions.vectors import np_fixed_cosines
-
-    left, right = _blocked_sides(emb.select("vec_id", "embedding"), _n_blocks(spark))
-
-    def block_topk(_key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series(dtype="int64"),
-                "id_b": pd.Series(dtype="int64"),
-                "cos_sim": pd.Series(dtype="float64"),
-            }
-        )
-        if lpdf.empty or rpdf.empty:
-            return empty
-        l_ids, l_q, l_n = _np_block(lpdf)
-        r_ids, r_q, r_n = _np_block(rpdf)
-        cos = np_fixed_cosines(l_q, l_n, r_q, r_n)
-        cos[l_ids[:, None] == r_ids[None, :]] = -np.inf  # self (diagonal grp)
-        sel = _np_topk_sel(cos, r_ids, k)
-        nq, k_eff = sel.shape
-        rows = np.repeat(np.arange(nq), k_eff)
-        flat = sel.ravel()
-        keep = np.isfinite(cos[rows, flat])  # blocks smaller than k
-        return pd.DataFrame(
-            {
-                "id_a": np.repeat(l_ids, k_eff)[keep],
-                "id_b": r_ids[flat][keep],
-                "cos_sim": cos[rows, flat][keep],
-            }
-        )
-
-    cand = (
-        left.groupby("ba", "bb")
-        .cogroup(right.groupby("ba", "bb"))
-        .applyInPandas(block_topk, schema="id_a long, id_b long, cos_sim double")
-    )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cos_sim"), F.asc("id_b"))
-    return (
-        cand.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-    )
+    strategy = "table" if _use_broadcast_path(spark, emb) else "blocked"
+    return _cosine_topk(emb, emb, 5, strategy, sf_dir)
 
 
 @register("i4c_topk_blocked", oracle=_I4_ORACLE, tier="T3")
 def i4c_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """i4's exact top-5 neighbors via the block-matrix join (what i4
     itself dispatches to above the size threshold)."""
-    return _topk_blocked(spark, load(spark, sf_dir, "embeddings"), 5)
+    emb = load(spark, sf_dir, "embeddings")
+    return _cosine_topk(emb, emb, 5, "blocked")
 
 
 # ---------------------------------------------------------------------------
@@ -1048,12 +994,7 @@ def _i4b_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = cand.withColumn("cos_sim", cosine("ea", "eb")).select(
         "id_a", "id_b", "cos_sim"
     )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cos_sim"), F.asc("id_b"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 3)
-
-    )
+    return rank_topk(pairs, 3)
 
 
 def _ann_bound_relation(
@@ -1230,11 +1171,7 @@ def _i4d_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cos_sim", cosine("ea", "eb"))
         .select("id_a", "id_b", "cos_sim")
     )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cos_sim"), F.asc("id_b"))
-    return (
-        cand.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 3)
-    )
+    return rank_topk(cand, 3)
 
 
 _I4D_FLOOR = 0.30  # measured 0.438 (sf0.01) / 0.387 (sf0.1)
@@ -1270,75 +1207,6 @@ _I4E_K = 5
 _I4E_QUERY_CAP = 64
 
 
-def topk_for_queries(emb: DataFrame, queries: DataFrame, k: int) -> DataFrame:
-    """Exact brute-force top-k neighbors for a bounded query batch —
-    the standard ANN-benchmark / query-serving shape (SIFT1M protocol:
-    a few thousand queries against an arbitrarily large corpus).
-
-    This reverses i4's broadcast direction: i4 broadcasts the TABLE
-    (all-pairs self-top-k, size-thresholded); here the QUERIES are
-    collected (bounded by the caller's LIMIT — the collect is legal at
-    any corpus size) and broadcast, the corpus is scanned ONCE with the
-    quantized numpy kernel, each Arrow batch emits its LOCAL top-k per
-    query, and a final window re-ranks the ≤ k·batches candidates per
-    query. No shuffle touches corpus rows — only candidate rows
-    (k × nq × n_batches at most) move, so the shape holds at 100 TB.
-    Local selection and the global window share one total order
-    (cos desc, id asc), so every global winner survives its batch."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    from mysql_to_clickhouse_spark.functions.vectors import (
-        np_fixed_cosines,
-        np_fixed_norms,
-        np_quantize,
-    )
-
-    spark = emb.sparkSession
-    q_rows = queries.select("vec_id", "embedding").collect()  # bounded: caller LIMITs
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    q_quant = np_quantize(np.array([r["embedding"] for r in q_rows], dtype=np.float64))
-    q_norms = np_fixed_norms(q_quant)
-    bc = spark.sparkContext.broadcast((q_ids, q_quant, q_norms))
-
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, quant_q, norms_q = bc.value
-        nq = len(ids_q)
-        for pdf in batches:
-            if not len(pdf) or not nq:
-                continue
-            v_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            v_quant = np_quantize(
-                np.array(list(pdf["embedding"]), dtype=np.float64)
-            )
-            v_norms = np_fixed_norms(v_quant)
-            cos = np_fixed_cosines(quant_q, norms_q, v_quant, v_norms)
-            cos_w = cos.copy()
-            cos_w[ids_q[:, None] == v_ids[None, :]] = -np.inf  # self-exclusion
-            sel = _np_topk_sel(cos_w, v_ids, k)
-            k_eff = sel.shape[1]
-            rows = np.repeat(np.arange(nq), k_eff)
-            flat = sel.ravel()
-            keep = np.isfinite(cos_w[rows, flat])  # batches smaller than k
-            yield pd.DataFrame(
-                {
-                    "id_a": np.repeat(ids_q, k_eff)[keep],
-                    "id_b": v_ids[flat][keep],
-                    "cos_sim": cos_w[rows, flat][keep],
-                }
-            )
-
-    cand = emb.select("vec_id", "embedding").mapInPandas(
-        local_topk, schema="id_a long, id_b long, cos_sim double"
-    )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cos_sim"), F.asc("id_b"))
-    return (
-        cand.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-    )
-
-
 _I4E_ORACLE = f"""
 WITH queries AS (
   SELECT vec_id, embedding FROM embeddings
@@ -1363,7 +1231,11 @@ ORDER BY id_a, rk
 def i4e_topk_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{k} exact neighbors for a deterministic bounded query batch
     (vec_id % 31 = 7, id-ordered, capped at 64 — portable to the SQL
-    oracle) via topk_for_queries' broadcast-queries single-scan kernel.
+    oracle) via ``_cosine_topk``'s "queries" topology: the bounded
+    batch is collected and broadcast (legal at any corpus size), the
+    corpus is scanned ONCE, each streamed slice emits its local top-k
+    per query and one window re-ranks the candidates — no shuffle
+    touches corpus rows, only ≤ k × nq × slices candidate rows move.
     Complements i4 (all-pairs self-top-k): this is the shape that
     serves query traffic against a 100 TB corpus, and the exact
     ground-truth baseline the ANN stress tiers (scripts/
@@ -1374,7 +1246,7 @@ def i4e_topk_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id")
         .limit(_I4E_QUERY_CAP)
     )
-    return topk_for_queries(emb, queries, _I4E_K)
+    return _cosine_topk(queries, emb, _I4E_K, "queries")
 
 
 # ---------------------------------------------------------------------------
@@ -3505,83 +3377,30 @@ ORDER BY vec_id
 """
 
 
-def _i28_best_blocked(
-    spark: SparkSession, corpus: DataFrame, ev: DataFrame
-) -> DataFrame:
-    """Per-corpus-vector nearest-eval CANDIDATES via the asymmetric
-    block cogroup (i4c's join topology with two distinct sides): each
-    (corpus-block × eval-block) cell emits, per corpus row, its local
-    winner under BOTH orderings the final aggregate uses — the
-    quantized argmax key (floor(cos·1e12)·1e5 − eval_id, int64-exact)
-    for nearest_eval_id and the raw cosine for max_cos. Emitting both
-    (≤ 2 rows per corpus row per eval block) makes the downstream
+def _i28_best_emit(l_ids, r_ids, cos):
+    """i28's emitter for the "blocked" topology (corpus rows left, eval
+    rows right): per corpus row, the tile's winner under BOTH orderings
+    the final aggregate uses — the lexicographic argmax (quantized
+    floor(cos·1e12) DESC, then the SMALLEST eval id) for
+    nearest_eval_id, and the raw-cosine argmax for max_cos. Emitting
+    both (≤ 2 rows per corpus row per eval block) makes the downstream
     max_by/max provably equal to the broadcast path's full scan even
     when two cosines collide at the 1e-12 quantization but differ in
-    the last ulp. No driver collect; the corpus replicates ×b to meet
-    every eval block — the honest cost once the eval side is too big
-    to broadcast."""
+    the last ulp; no packed scalar key, so no eval-id range limit."""
     import numpy as np
-    import pandas as pd
 
-    from mysql_to_clickhouse_spark.functions.vectors import np_fixed_cosines
-
-    b = _n_blocks(spark)
-    blocks = F.array(*[F.lit(i) for i in range(b)])
-    left = corpus.select(
-        "vec_id",
-        "embedding",
-        F.pmod(F.xxhash64("vec_id"), F.lit(b)).cast("int").alias("ba"),
-        F.explode(blocks).alias("bb"),
+    q = np.floor(cos * 1e12).astype(np.int64)
+    id_or_inf = np.where(
+        q == q.max(axis=1, keepdims=True), r_ids[None, :], np.iinfo(np.int64).max
     )
-    right = ev.select(
-        F.col("eval_id").alias("vec_id"),
-        F.col("e").alias("embedding"),
-        F.explode(blocks).alias("ba"),
-        F.pmod(F.xxhash64("eval_id"), F.lit(b)).cast("int").alias("bb"),
-    )
-
-    def block_best(_key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_id": pd.Series(dtype="int64"),
-                "eval_id": pd.Series(dtype="int64"),
-                "cos_sim": pd.Series(dtype="float64"),
-            }
-        )
-        if lpdf.empty or rpdf.empty:
-            return empty
-        l_ids, l_q, l_n = _np_block(lpdf)
-        r_ids, r_q, r_n = _np_block(rpdf)
-        cos = np_fixed_cosines(l_q, l_n, r_q, r_n)
-        # lexicographic argmax (quantized cos DESC, eval_id ASC) with no
-        # packed-scalar range limit: among the max-q columns of each row
-        # take the SMALLEST eval id (the old floor(cos·1e12)·1e5 − id
-        # packing stopped being order-preserving past 100k eval ids)
-        q = np.floor(cos * 1e12).astype(np.int64)
-        q_max = q.max(axis=1, keepdims=True)
-        id_or_inf = np.where(
-            q == q_max, r_ids[None, :], np.iinfo(np.int64).max
-        )
-        by_key = id_or_inf.argmin(axis=1)
-        by_cos = cos.argmax(axis=1)
-        rows = np.arange(len(l_ids))
-        return pd.DataFrame(
-            {
-                "vec_id": np.concatenate([l_ids, l_ids]),
-                "eval_id": np.concatenate([r_ids[by_key], r_ids[by_cos]]),
-                "cos_sim": np.concatenate(
-                    [cos[rows, by_key], cos[rows, by_cos]]
-                ),
-            }
-        )
-
-    return (
-        left.groupby("ba", "bb")
-        .cogroup(right.groupby("ba", "bb"))
-        .applyInPandas(
-            block_best, schema="vec_id long, eval_id long, cos_sim double"
-        )
-    )
+    by_key = id_or_inf.argmin(axis=1)
+    by_cos = cos.argmax(axis=1)
+    rows = np.arange(len(l_ids))
+    return {
+        "vec_id": np.concatenate([l_ids, l_ids]),
+        "eval_id": np.concatenate([r_ids[by_key], r_ids[by_cos]]),
+        "cos_sim": np.concatenate([cos[rows, by_key], cos[rows, by_cos]]),
+    }
 
 
 @register("i28_semantic_decontam", oracle=_I28_ORACLE, tier="T2")
@@ -3600,8 +3419,8 @@ def i28_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     is corpus × |eval| with per-row argmax folded map-side — no
     shuffle of the corpus at all. Above
     ``spark.mysql2ch.vector.broadcastThreshold`` (i3/i4's size rule)
-    the eval side routes through the blocked pair kernel instead
-    (``_i28_best_blocked``): an oversized eval set degrades to a
+    the eval side routes through ``_cosine_tiles``' "blocked" topology
+    with ``_i28_best_emit``: an oversized eval set degrades to a
     bounded cogroup, never an executor OOM. Both paths feed the SAME
     final argmax expressions, hash-equal under the forced-threshold
     test (tests/test_dispatch.py)."""
@@ -3617,7 +3436,15 @@ def i28_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine("embedding", "e").alias("cos_sim"),
         )
     else:
-        scored = _i28_best_blocked(spark, corpus, ev)
+        # the corpus replicates ×b to meet every eval block — the honest
+        # cost once the eval side is too big to broadcast
+        scored = _cosine_tiles(
+            corpus,
+            ev.select(F.col("eval_id").alias("vec_id"), F.col("e").alias("embedding")),
+            _i28_best_emit,
+            "vec_id long, eval_id long, cos_sim double",
+            "blocked",
+        )
     # struct argmax key: (quantized cos DESC, eval_id ASC via negation) —
     # lexicographic struct ordering has no packed-scalar range limit, so
     # the tie-break is exact for any int64 eval_id (the oracle states

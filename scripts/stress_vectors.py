@@ -108,19 +108,18 @@ def main() -> None:
     import tempfile
 
     import numpy as np
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from mysql_to_clickhouse_spark.functions.vectors import (
         np_fixed_cosines,
         np_fixed_norms,
         np_quantize,
+        rank_topk,
     )
     from mysql_to_clickhouse_spark.operators.llmops import (
+        _cosine_topk,
         _ivf_centroids,
-        _np_topk_sel,
-        _topk_blocked,
-        topk_for_queries,
+        _topk_emit,
     )
     from mysql_to_clickhouse_spark.registry import all_queries
     from mysql_to_clickhouse_spark.session import build_session
@@ -209,7 +208,7 @@ def main() -> None:
         t0 = time.time()
         q_id_set = set(served["id_a"].unique().tolist())
         blocked = (
-            _topk_blocked(spark, emb.select("vec_id", "embedding"), K_SERVE)
+            _cosine_topk(emb, emb, K_SERVE, "blocked")
             .filter(F.col("id_a").isin(list(q_id_set)))
             .toPandas()
         )
@@ -277,11 +276,12 @@ def main() -> None:
         (q_ids, q_quant, q_norms, cents_np, probe_of)
     )
 
+    emit_topk = _topk_emit(K_SERVE, ranked=False)
+
     def ivf_local_topk(batches):
         import pandas as pd
 
         ids_q, quant_q, norms_q, cents, probes = bc.value
-        nq = len(ids_q)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -292,30 +292,15 @@ def main() -> None:
             v_quant = np_quantize(X)
             v_norms = np_fixed_norms(v_quant)
             cos = np_fixed_cosines(quant_q, norms_q, v_quant, v_norms)
-            cos_w = np.where(probes[:, cells], cos, -np.inf)  # cell mask
-            cos_w[ids_q[:, None] == v_ids[None, :]] = -np.inf
-            sel = _np_topk_sel(cos_w, v_ids, K_SERVE)
-            k_eff = sel.shape[1]
-            rows = np.repeat(np.arange(nq), k_eff)
-            flat = sel.ravel()
-            keep = np.isfinite(cos_w[rows, flat])
-            yield pd.DataFrame(
-                {
-                    "id_a": np.repeat(ids_q, k_eff)[keep],
-                    "id_b": v_ids[flat][keep],
-                    "cos_sim": cos_w[rows, flat][keep],
-                }
-            )
+            # unprobed cells masked to -inf: the top-k emitter drops them
+            # like the self cell, so only probed candidates rank
+            cos_w = np.where(probes[:, cells], cos, -np.inf)
+            yield pd.DataFrame(emit_topk(ids_q, v_ids, cos_w))
 
     cand = emb.select("vec_id", "embedding").mapInPandas(
         ivf_local_topk, schema="id_a long, id_b long, cos_sim double"
     )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cos_sim"), F.asc("id_b"))
-    ivf = (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= K_SERVE)
-        .toPandas()
-    )
+    ivf = rank_topk(cand, K_SERVE).toPandas()
     ivf_s = time.time() - t0
     ivf_edges = set(map(tuple, ivf[["id_a", "id_b"]].values))
     recall = len(exact_edges & ivf_edges) / max(len(exact_edges), 1)

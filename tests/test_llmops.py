@@ -164,17 +164,39 @@ def test_release_caches_frees_persisted_state(spark):
     assert qs["i2_minhash_neardup"].fn(spark, SMOKE_SF_DIR).count() >= 0
 
 
-def test_blocked_cosine_needs_no_driver_collect(spark, monkeypatch):
+def test_blocked_cosine_needs_no_driver_collect(spark, monkeypatch, tmp_path):
     """i3c/i4c are the beyond-broadcast escalation: they must produce
     the exact i3/i4 answers WITHOUT the driver-side collect/broadcast
-    the fast path uses — proven by making that path explode."""
+    the fast path uses — proven by making that path explode.
+
+    Inputs: the smoke fixture; a tie-heavy table of 60 rows drawn from
+    3 distinct vectors, where every cosine ties exactly and the id
+    tie-break alone decides every rank across blocks (and i4e must
+    equal i4 on the ids it served); and an empty table, which every
+    path must answer with no rows."""
     import mysql_to_clickhouse_spark.operators.llmops as llmops
     from mysql_to_clickhouse_spark.registry import all_queries
     from tests.conftest import SMOKE_SF_DIR
 
+    ties, empty = str(tmp_path / "ties"), str(tmp_path / "empty")
+    base = [[1.0] * 64, [1.0] * 32 + [0.0] * 32, [0.5, -0.5] * 32]
+    spark.createDataFrame(
+        [(i, base[i % 3], i % 2) for i in range(60)],
+        "vec_id long, embedding array<double>, label int",
+    ).write.parquet(f"{ties}/embeddings.parquet")
+    spark.createDataFrame(
+        [], "vec_id long, embedding array<double>, label int"
+    ).write.parquet(f"{empty}/embeddings.parquet")
+    sf_dirs = (SMOKE_SF_DIR, ties, empty)
+
     qs = all_queries()
-    exact_pairs = qs["i3_cosine_pairs"].fn(spark, SMOKE_SF_DIR).toPandas()
-    exact_topk = qs["i4_topk_similar"].fn(spark, SMOKE_SF_DIR).toPandas()
+    exact = {
+        d: (
+            qs["i3_cosine_pairs"].fn(spark, d).toPandas(),
+            qs["i4_topk_similar"].fn(spark, d).toPandas(),
+        )
+        for d in sf_dirs
+    }
 
     def boom(*_a, **_k):
         raise AssertionError("blocked path must not touch _broadcast_matrix")
@@ -183,24 +205,36 @@ def test_blocked_cosine_needs_no_driver_collect(spark, monkeypatch):
     # force a genuinely multi-block plan (3x3 block pairs)
     spark.conf.set(llmops._COSINE_BLOCKS_CONF, "3")
     try:
-        blocked_pairs = qs["i3c_cosine_blocked"].fn(spark, SMOKE_SF_DIR).toPandas()
-        blocked_topk = qs["i4c_topk_blocked"].fn(spark, SMOKE_SF_DIR).toPandas()
+        blocked = {
+            d: (
+                qs["i3c_cosine_blocked"].fn(spark, d).toPandas(),
+                qs["i4c_topk_blocked"].fn(spark, d).toPandas(),
+                qs["i4e_topk_queries"].fn(spark, d).toPandas(),
+            )
+            for d in sf_dirs
+        }
     finally:
         spark.conf.unset(llmops._COSINE_BLOCKS_CONF)
 
     key = ["id_a", "id_b"]
-    pd.testing.assert_frame_equal(
-        exact_pairs.sort_values(key).reset_index(drop=True),
-        blocked_pairs.sort_values(key).reset_index(drop=True),
-    )
-    pd.testing.assert_frame_equal(
-        exact_topk.sort_values(key).reset_index(drop=True)[
-            ["id_a", "id_b", "cos_sim", "rk"]
-        ],
-        blocked_topk.sort_values(key).reset_index(drop=True)[
-            ["id_a", "id_b", "cos_sim", "rk"]
-        ],
-    )
+    cols = ["id_a", "id_b", "cos_sim", "rk"]
+    for d in sf_dirs:
+        exact_pairs, exact_topk = exact[d]
+        blocked_pairs, blocked_topk, served = blocked[d]
+        assert (len(exact_pairs) > 0 and len(served) > 0) == (d != empty)
+        pd.testing.assert_frame_equal(
+            exact_pairs.sort_values(key).reset_index(drop=True),
+            blocked_pairs.sort_values(key).reset_index(drop=True),
+        )
+        pd.testing.assert_frame_equal(
+            exact_topk.sort_values(key).reset_index(drop=True)[cols],
+            blocked_topk.sort_values(key).reset_index(drop=True)[cols],
+        )
+        sliced = exact_topk[exact_topk["id_a"].isin(served["id_a"].unique())]
+        pd.testing.assert_frame_equal(
+            sliced.sort_values(key).reset_index(drop=True)[cols],
+            served.sort_values(key).reset_index(drop=True)[cols],
+        )
 
 
 def test_topk_queries_vs_all_pairs(spark):
