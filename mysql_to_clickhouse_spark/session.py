@@ -24,6 +24,14 @@ same logical plans survive a 1000-executor / 100 TB deployment:
   ``FileContext`` support: it keeps the ``.crc`` checksums and the
   temp-file-then-rename commit but renames in-process, so only the
   ``chmod`` of file creation still forks.
+- ``spark.sql.codegen.cache.maxEntries`` = 4096 (Spark's default is
+  100). Working sets of distinct generated classes, measured at
+  sf0.01: the benchmark's ``llm_pipeline`` catalog 128, the binlog CDC
+  loop 34, one pass over the whole registry 3,223. The conf is static,
+  so it applies only when ``build_session`` creates the JVM; a reused
+  session keeps the value it started with (warned below), and the
+  driver's plain session in ``scripts/drive_contract.py`` keeps Spark's
+  100. On a cluster the cap reaches executors through the SparkConf.
 """
 
 from __future__ import annotations
@@ -33,9 +41,17 @@ import warnings
 
 from pyspark.sql import SparkSession
 
-# Confs that only apply at JVM launch: getOrCreate silently ignores them
-# when it reuses a live session, so build_session detects-and-warns.
-_JVM_STARTUP_CONFS = ("spark.driver.memory",)
+# Spark caches compiled codegen classes in an LRU keyed by generated
+# source. Under LRU, a session that cycles through more distinct
+# classes than the cap evicts each class just before its next use, so
+# every lookup misses: one Janino compile (mean 8.6 ms over a registry
+# pass on 4 vCPU) plus a freshly loaded class that runs interpreted
+# until the JIT warms it again. Measured working sets: 128 classes for
+# the benchmark's llm_pipeline catalog (at Spark's default of 100 a warm
+# engine recompiled ~70 of them per catalog round), 34 for the binlog
+# CDC loop, 3,223 for one pass over the whole registry at sf0.01. 4096
+# is the smallest power of two above the largest.
+_CODEGEN_CACHE_ENTRIES = "4096"
 
 
 def build_session(
@@ -50,13 +66,13 @@ def build_session(
     cores). On a real cluster pass ``master=None`` and submit normally —
     every config below is master-agnostic.
 
-    NOTE ``spark.driver.memory`` (and any other JVM-startup conf) only
-    takes effect when this call CREATES the JVM; if getOrCreate reuses
-    an already-running session (tests, the verification driver) the
-    setting is ignored — this function detects that case and emits a
-    UserWarning naming the conf and both values. For processes you
-    launch yourself, pass it via spark-submit / SPARK_GRAFT_DRIVER_MEM
-    before first start.
+    NOTE ``spark.driver.memory`` and the codegen cache cap (the
+    ``startup`` confs below) only take effect when this call CREATES the
+    JVM; if getOrCreate reuses an already-running session (tests, the
+    verification driver) the setting is ignored — this function detects
+    that case and emits a UserWarning naming the conf and both values.
+    For processes you launch yourself, pass it via spark-submit /
+    SPARK_GRAFT_DRIVER_MEM before first start.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -78,7 +94,6 @@ def build_session(
         # dims (region/nation/customer/supplier/part) all broadcast at any SF
         # where they remain dimension-sized; 64 MB is a safe cluster default.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
         .config(
@@ -87,16 +102,17 @@ def build_session(
             "FileSystemBasedCheckpointFileManager",
         )
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    requested = {
+    # getOrCreate silently ignores these when it reuses a live session,
+    # so the reuse branch below detects-and-warns. The codegen cache cap
+    # is a static SQL conf, read once when Spark's code generator loads.
+    startup = {
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        **{
-            k: v
-            for k, v in (extra_conf or {}).items()
-            if k in _JVM_STARTUP_CONFS
-        },
+        "spark.sql.codegen.cache.maxEntries": _CODEGEN_CACHE_ENTRIES,
     }
+    conf = {**startup, **(extra_conf or {})}
+    requested = {k: conf[k] for k in startup}
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     preexisting = SparkSession.getActiveSession()
     spark = builder.getOrCreate()
     if preexisting is not None and preexisting is spark:

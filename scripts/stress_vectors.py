@@ -125,8 +125,13 @@ def main() -> None:
     from mysql_to_clickhouse_spark.session import build_session
     from mysql_to_clickhouse_spark.tables import load
 
+    # one task slot per usable core, as perfbench sizes its session;
+    # SPARK_GRAFT_CPUS overrides
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     spark = build_session(
-        app_name="stress_vectors", master="local[32]", shuffle_partitions=64
+        app_name="stress_vectors",
+        master=f"local[{cpus}]",
+        shuffle_partitions=2 * cpus,
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -3,6 +3,12 @@
 For each registry entry at $SPARK_GRAFT_SF_DIR (default sf0.01):
 cold = build+execute+toPandas of a fresh invocation;
 warm = median of 3 repeats on the same DataFrame (prepared-plan model).
+Each run also records the generated classes Spark compiled during it
+and their Janino compile milliseconds (``*_compiles``,
+``*_compile_ms``; warm = median of the 3 repeats), read from Spark's
+own codegen counters, so no second pass over the data. Warm runs
+reuse the DataFrame's plan: a warm compile means the codegen cache
+evicted the class, not that the query generates new code per call.
 Writes JSON to stdout, sorted by cold desc. Purely diagnostic — the
 optimization round's checklist source.
 
@@ -20,6 +26,31 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _codegen_counters(spark) -> tuple[int, int]:
+    """(classes compiled, compile ns) so far in this JVM. Local mode runs
+    tasks in the driver JVM, so task-side compiles are counted too."""
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return metrics.METRIC_COMPILATION_TIME().getCount(), codegen.compileTime()
+
+
+def _timed(spark, fn):
+    """Run ``fn``; return (its result, wall s, classes compiled, compile ms)."""
+    n0, ns0 = _codegen_counters(spark)
+    t0 = time.perf_counter()
+    result = fn()
+    wall = time.perf_counter() - t0
+    n1, ns1 = _codegen_counters(spark)
+    return result, wall, n1 - n0, (ns1 - ns0) / 1e6
+
+
+def _build_and_fetch(spark, q, sf_dir):
+    df = q.fn(spark, sf_dir)
+    df.toPandas()
+    return df
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
@@ -32,18 +63,19 @@ def main() -> None:
     out = {}
     for name, q in sorted(all_queries().items()):
         try:
-            t0 = time.perf_counter()
-            df = q.fn(spark, sf_dir)
-            df.toPandas()
-            cold = time.perf_counter() - t0
-            runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                df.toPandas()
-                runs.append(time.perf_counter() - t0)
+            df, cold, cold_n, cold_ms = _timed(
+                spark, lambda: _build_and_fetch(spark, q, sf_dir)
+            )
+            _, warm, warm_n, warm_ms = zip(
+                *(_timed(spark, df.toPandas) for _ in range(3))
+            )
             out[name] = {
                 "cold": round(cold, 3),
-                "warm": round(statistics.median(runs), 3),
+                "warm": round(statistics.median(warm), 3),
+                "cold_compiles": cold_n,
+                "cold_compile_ms": round(cold_ms, 1),
+                "warm_compiles": statistics.median(warm_n),
+                "warm_compile_ms": round(statistics.median(warm_ms), 1),
             }
         except Exception as exc:  # noqa: BLE001
             out[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}

@@ -77,17 +77,58 @@ def test_decimal_money_sum_matches_cents_exactly(spark):
 
 
 def test_build_session_warns_on_ignored_jvm_conf(spark):
-    """getOrCreate reuse must not silently ignore JVM-startup settings:
-    build_session detects the reuse and warns with both values."""
+    """getOrCreate reuse must not silently ignore JVM-startup settings
+    (or static SQL confs such as the codegen cache cap): build_session
+    detects the reuse and warns with both values."""
     import pytest as _pytest
 
     from mysql_to_clickhouse_spark.session import build_session
 
-    with _pytest.warns(UserWarning, match="spark.driver.memory"):
-        build_session(
-            master=spark.sparkContext.master,
-            extra_conf={"spark.driver.memory": "123g"},
-        )
+    for conf, value in (
+        ("spark.driver.memory", "123g"),
+        ("spark.sql.codegen.cache.maxEntries", "8192"),
+    ):
+        with _pytest.warns(UserWarning, match=conf):
+            build_session(
+                master=spark.sparkContext.master,
+                extra_conf={conf: value},
+            )
+
+
+# The benchmark's llm_pipeline catalog. At TEST_SF_DIR these generate
+# more than Spark's default 100 codegen classes together, and none of
+# them generates new code on every call.
+_CODEGEN_CATALOG = (
+    "i1_exact_dedup", "i2b_jaccard_exact", "i6_tfidf_keywords",
+    "i22_containment_dedup", "i3_cosine_pairs", "i4_topk_similar",
+    "i5_text_stats", "i10_quality_score",
+    "s16_ch_any_join", "s2_sql_window_qualify", "s4_grouping_sets",
+)
+
+
+def test_warm_catalog_pass_compiles_no_codegen_class(spark):
+    """A session that re-issues the same query shapes reuses its
+    compiled codegen classes: with build_session's cache cap above the
+    catalog's working set, a second pass compiles nothing. At Spark's
+    default cap the LRU evicts each class just before its next use and
+    the second pass recompiles most of them."""
+    from mysql_to_clickhouse_spark.registry import all_queries
+    from mysql_to_clickhouse_spark.session import release_all
+    from tests.conftest import TEST_SF_DIR
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+    qs = all_queries()
+
+    def catalog_pass() -> int:
+        n0 = compiles.getCount()
+        for qid in _CODEGEN_CATALOG:
+            release_all(spark)
+            qs[qid].fn(spark, TEST_SF_DIR).toPandas()
+        return compiles.getCount() - n0
+
+    catalog_pass()
+    assert catalog_pass() == 0
 
 
 def test_load_warns_on_explicit_foreign_timezone(spark):
