@@ -2228,9 +2228,12 @@ def a35c_binlog_stream(
 
     Scale: this IS the deployment shape — rotations land in object
     storage, each micro-batch decodes only new files (per-file
-    parallelism), state merges by PK exchange, and the checkpoint WAL
-    gives exactly-once across restarts (proven for the same state
-    protocol in tests/test_streaming.py kill-and-resume)."""
+    parallelism), state merges by PK exchange once the merge input
+    exceeds the size AQE would coalesce to one partition (at or below
+    it, in one partition without an exchange: streaming/cdc.py), and
+    the checkpoint WAL gives exactly-once across restarts (proven for
+    the same state protocol in tests/test_streaming.py
+    kill-and-resume)."""
     from mysql_to_clickhouse_spark.sources.binlog import read_binlog_stream
     from mysql_to_clickhouse_spark.streaming.cdc import (
         make_binlog_apply,

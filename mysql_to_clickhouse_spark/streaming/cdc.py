@@ -29,6 +29,24 @@ writing DataFrame's schema under
 on the driver, so building the read launches no schema-inference job,
 which on a micro-batch loop would be a fixed cost of every batch.
 
+ONE STAGE FOR A SMALL STATE: the merge input (previous committed
+version ∪ micro-batch) and the FINAL read are coalesced to one
+partition before their key operator when their estimated bytes are at
+most the size up to which AQE coalesces a shuffle's reduce side to ONE
+partition. With ``spark.sql.adaptive.coalescePartitions.parallelismFirst``
+(Spark's default) AQE spreads any larger shuffle over the default
+parallelism, down to ``coalescePartitions.minPartitionSize`` (1 MB
+unless set) per partition, so that floor is the limit; without it the
+limit is ``advisoryPartitionSizeInBytes``. The single partition
+satisfies the window's and the aggregate's distribution, so the plan
+has no Exchange. At or below the limit the exchange buys no
+parallelism, since AQE would run its reduce side as one task anyway:
+it only adds a job, a shuffle write and read, and an AQE re-plan to
+every batch and every read. Above it the plans keep their hash
+exchange. The merge estimates from Catalyst's optimized-plan
+statistics (the batch may come from any source); the FINAL read from
+the part-file bytes of the version's own listing.
+
 At scale the state store would be a partitioned table (or Delta/
 Iceberg MERGE) and version discovery a manifest/log read instead of a
 directory listing; the micro-batch merge below is partition-pruned by
@@ -78,6 +96,24 @@ def _committed_versions(state_root: str) -> list[int]:
     return sorted(out)
 
 
+def _one_partition_if_small(df: DataFrame, est_bytes: int) -> DataFrame:
+    """``df`` coalesced to one partition when ``est_bytes`` is at most
+    the size up to which AQE coalesces a shuffle's reduce side to one
+    partition: the effective ``coalescePartitions.minPartitionSize``
+    under ``coalescePartitions.parallelismFirst``, else the effective
+    ``advisoryPartitionSizeInBytes`` (read without a default, so its
+    legacy fallback key counts). Values are parsed by Spark's own
+    byte-string parser. Otherwise ``df`` is returned unchanged."""
+    spark = df.sparkSession
+    aqe = "spark.sql.adaptive."
+    if spark.conf.get(aqe + "coalescePartitions.parallelismFirst").lower() == "true":
+        size = spark.conf.get(aqe + "coalescePartitions.minPartitionSize")
+    else:
+        size = spark.conf.get(aqe + "advisoryPartitionSizeInBytes")
+    limit = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(size)
+    return df.coalesce(1) if est_bytes <= limit else df
+
+
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
@@ -93,10 +129,20 @@ def _read_version(spark: SparkSession, state_root: str, version: int) -> DataFra
 
 
 def _read_latest(spark: SparkSession, state_root: str) -> DataFrame:
+    """The latest committed version, read as one partition when its
+    part files fit one (``_one_partition_if_small``)."""
     versions = _committed_versions(state_root)
     if not versions:
         raise FileNotFoundError(f"no committed state under {state_root}")
-    return _read_version(spark, state_root, versions[-1])
+    vdir = os.path.join(state_root, f"v{versions[-1]}")
+    nbytes = sum(
+        os.path.getsize(os.path.join(vdir, f))
+        for f in os.listdir(vdir)
+        if f.endswith(".parquet")
+    )
+    return _one_partition_if_small(
+        _read_version(spark, state_root, versions[-1]), nbytes
+    )
 
 
 def _merge_commit(
@@ -105,11 +151,14 @@ def _merge_commit(
     """Union ``batch`` into the largest committed version strictly below
     ``batch_id`` (so a re-delivered batch never reads its own partial
     output), keep the latest row per key by ``order``, and write the
-    result with overwrite to ``v{batch_id}``."""
+    result with overwrite to ``v{batch_id}``. A union that fits one
+    partition is merged in one."""
     prior = [v for v in _committed_versions(state_root) if v < batch_id]
     if prior:
         prev = _read_version(batch.sparkSession, state_root, max(prior))
         batch = prev.unionByName(batch)
+    est = batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    batch = _one_partition_if_small(batch, int(est))
     _latest_per_key(batch, order).write.mode("overwrite").parquet(
         os.path.join(state_root, f"v{batch_id}")
     )

@@ -320,7 +320,15 @@ def test_final_read_builds_without_spark_job(spark, tmp_path):
     version's own parquet footer, so it launches no Spark job (an
     inferred read runs one schema-inference job), and it yields the
     same schema and rows as a plain inferred read of that version —
-    also when that version holds only tombstones."""
+    also when that version holds only tombstones.
+
+    The state here fits one partition, so each merge and each FINAL
+    read + group-by runs as ONE job: no shuffle exchange, whose reduce
+    side AQE would coalesce to one partition anyway. Replayed with the
+    one-partition size AQE uses set to 1 byte (the minimum partition
+    size under ``parallelismFirst``, or the advisory size without it),
+    the same batches take the exchange path (at least 2 jobs each) and
+    end in the same rows."""
     from datetime import datetime, timedelta
 
     from pyspark.sql import functions as F
@@ -361,23 +369,75 @@ def test_final_read_builds_without_spark_job(spark, tmp_path):
          cdc_batches, F.col("event_type") != "error"),
     ]
     sc = spark.sparkContext
+    aqe = "spark.sql.adaptive."
+    # None: the session's own settings; else the confs that make AQE's
+    # one-partition size 1 byte, under and without parallelismFirst
+    replays = {
+        None: {},
+        "minsize": {aqe + "coalescePartitions.minPartitionSize": "1b"},
+        "advisory": {
+            aqe + "coalescePartitions.parallelismFirst": "false",
+            aqe + "advisoryPartitionSizeInBytes": "1b",
+        },
+    }
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
     for name, make_apply, read_state, schema, batches, live in cases:
-        root = str(tmp_path / name)
-        os.makedirs(root)
-        apply = make_apply(root)
+        # land each batch as parquet, as a file-stream micro-batch
+        # arrives, so its plan carries size statistics
+        landed = []
         for batch_id, rows in enumerate(batches):
-            apply(spark.createDataFrame(rows, schema), batch_id)
-            group = f"final_read_{name}_{batch_id}"
-            sc.setJobGroup(group, "build the FINAL read")
+            path = str(tmp_path / f"{name}_in{batch_id}")
+            spark.createDataFrame(rows, schema).write.parquet(path)
+            landed.append(spark.read.schema(schema).parquet(path))
+        finals = {}
+        for replay, confs in replays.items():
+            old = {k: spark.conf.get(k) for k in confs}
             try:
-                final = read_state(spark, root)
+                for k, v in confs.items():
+                    spark.conf.set(k, v)
+                root = str(tmp_path / f"{name}_{replay}")
+                os.makedirs(root)
+                apply = make_apply(root)
+                for batch_id, batch in enumerate(landed):
+                    tag = f"{name}_{replay}_{batch_id}"
+                    _, n_apply = jobs_of(
+                        f"apply_{tag}", lambda: apply(batch, batch_id)
+                    )
+                    final, n_build = jobs_of(
+                        f"build_{tag}", lambda: read_state(spark, root)
+                    )
+                    assert n_build == 0
+                    _, n_read = jobs_of(
+                        f"read_{tag}",
+                        lambda: read_state(spark, root)
+                        .groupBy("user_id").count().collect(),
+                    )
+                    plain = spark.read.parquet(os.path.join(root, f"v{batch_id}"))
+                    plain = plain.filter(live).select(*final.columns)
+                    assert final.schema == plain.schema
+                    got = sorted(map(tuple, final.collect()))
+                    assert got == sorted(map(tuple, plain.collect()))
+                    assert len(got) == (2 if batch_id == 0 else 0)
+                    if replay is None:
+                        assert (n_apply, n_read) == (1, 1), tag
+                    else:
+                        # an exchange over no live row has no reduce job
+                        # (AQE drops the empty side), so its read runs 1
+                        assert n_apply >= 2, (tag, n_apply)
+                        assert n_read >= (2 if got else 1), (tag, n_read)
+                    finals[replay, batch_id] = got
             finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.description", None)
-            assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-            plain = spark.read.parquet(os.path.join(root, f"v{batch_id}"))
-            plain = plain.filter(live).select(*final.columns)
-            assert final.schema == plain.schema
-            got = sorted(map(tuple, final.collect()))
-            assert got == sorted(map(tuple, plain.collect()))
-            assert len(got) == (2 if batch_id == 0 else 0)
+                for k, v in old.items():
+                    spark.conf.set(k, v)
+        for replay in replays:
+            for batch_id in range(len(batches)):
+                assert finals[replay, batch_id] == finals[None, batch_id]
