@@ -12,6 +12,7 @@ Layout
 ------
 - ``session``    : tuned SparkSession builder (local testbed + scale notes)
 - ``tables``     : loaders for the ten driver parquet tables
+- ``caches``     : the session-scoped cache registry ``release_all`` drains
 - ``registry``   : the operator/query registry keyed by SURVEY.md §2 IDs
 - ``operators/`` : one module per §2 section (scans, filters, joins, ...)
 - ``functions/`` : reusable column-expression helpers (exact numerics,

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mysql_to_clickhouse_spark import caches
 from mysql_to_clickhouse_spark.functions.numeric import (
     fixed_point,
     o_dsum,
@@ -89,29 +90,6 @@ _MINHASH_K = 16  # signature length
 _BANDS = 4  # → rows-per-band r = 4; θ ≈ (1/b)^(1/r) ≈ 0.71 jaccard
 _BUCKET_CAP = 32  # band buckets larger than this switch to star linking
 
-import weakref as _weakref
-
-# per-(session, sf_dir) persisted MinHash signatures: repeated i2 calls
-# reuse one cached plan instead of re-persisting (release: release_caches)
-_SIGS_CACHE: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-# per-(session, sf_dir) persisted (source, word) count frames (i21):
-# same keyed-reuse + immutable-input contract as _SIGS_CACHE (r13 —
-# previously an anonymous .cache() that nothing ever released)
-_WC_CACHE: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-# JVM RDD handles of the FINAL connected-components label checkpoints
-# still alive for this session (r13): intermediate rounds unpersist
-# inside the loop; the returned frame's checkpoint is released here so
-# a long-lived session does not pin |V|-row blocks per invocation.
-_CKPT_CACHE: "_weakref.WeakKeyDictionary[SparkSession, list]" = (
-    _weakref.WeakKeyDictionary()
-)
-
 
 def _minhash_sigs(spark: SparkSession, exploded: DataFrame, sf_dir: str) -> DataFrame:
     """Per-(session, sf_dir) persisted signature frame.
@@ -121,7 +99,7 @@ def _minhash_sigs(spark: SparkSession, exploded: DataFrame, sf_dir: str) -> Data
     Testbed sf_dirs are immutable by contract; anything that rewrites
     data under a previously-loaded path within one session MUST call
     ``release_caches(spark)`` first or i2 will reuse stale signatures."""
-    per_session = _SIGS_CACHE.setdefault(spark, {})
+    per_session = caches.entries(spark, "llmops_sigs")
     if sf_dir in per_session:
         return per_session[sf_dir]
     min_cols = [
@@ -134,27 +112,17 @@ def _minhash_sigs(spark: SparkSession, exploded: DataFrame, sf_dir: str) -> Data
 
 
 def release_caches(spark: SparkSession) -> None:
-    """Release every session-lifetime cache this module holds for
-    ``spark``: unpersist MinHash signature frames, destroy broadcast
-    embedding matrices, unpersist the per-(session, sf_dir) word-count
-    frames (i21) and the final connected-components label checkpoints.
-    Long-lived shared sessions call this between workloads so executor
-    memory is not pinned indefinitely. Frames produced by
+    """Release the llmops caches for ``spark``: MinHash signature
+    frames, broadcast embedding matrices, word-count frames (i21) and
+    the final connected-components label checkpoints. Frames produced by
     ``connected_components`` are INVALID after this call (their
     localCheckpoint data is dropped); re-invoke the operator for a
-    fresh frame — the same workload-boundary contract as the sigs
-    cache."""
-    for sigs in _SIGS_CACHE.pop(spark, {}).values():
-        sigs.unpersist(blocking=True)
-    for bc in _MATRIX_CACHE.pop(spark, {}).values():
-        bc.destroy()
-    for wc in _WC_CACHE.pop(spark, {}).values():
-        wc.unpersist(blocking=True)
-    for handle in _CKPT_CACHE.pop(spark, []):
-        try:
-            handle.unpersist(True)
-        except Exception:  # noqa: BLE001 — the JVM RDD may already be gone
-            pass
+    fresh frame. ``session.release_all`` drains these and every other
+    session cache."""
+    caches.release(
+        spark, "llmops_sigs", "llmops_matrices", "llmops_wordcounts",
+        "llmops_ckpts",
+    )
 
 
 @register(
@@ -487,11 +455,6 @@ ORDER BY id_a, id_b
 """
 
 
-_MATRIX_CACHE: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
 def _broadcast_matrix(spark: SparkSession, emb: DataFrame, sf_dir: str):
     """Collect the embedding table once (vec_id-sorted) and broadcast
     (ids, quantized matrix, exact norms) to every task — the fixed side
@@ -505,7 +468,7 @@ def _broadcast_matrix(spark: SparkSession, emb: DataFrame, sf_dir: str):
     same kernel over a block-matrix cogroup — one extra shuffle."""
     # one collect + broadcast per (session, table); repeated i3/i4/i8
     # invocations reuse it instead of leaking broadcast blocks
-    per_session = _MATRIX_CACHE.setdefault(spark, {})
+    per_session = caches.entries(spark, "llmops_matrices")
     if sf_dir not in per_session:
         pdf = emb.select("vec_id", "embedding").toPandas().sort_values("vec_id")
         per_session[sf_dir] = spark.sparkContext.broadcast(_np_block(pdf))
@@ -1981,8 +1944,8 @@ def connected_components(
     # builds every registered query, tripped the zero-persisted-RDD
     # assertion on exactly this). Unpersist the superseded round's RDD
     # right after the new checkpoint materializes; the FINAL round's
-    # handle (backing the returned frame) is registered in _CKPT_CACHE
-    # and drained by release_caches.
+    # handle (backing the returned frame) is registered in the
+    # session's llmops_ckpts cache and drained by release_caches.
     prev_handle = _local_ckpt_rdd(labels)
     prev_sum = None
     rounds = 0
@@ -2016,7 +1979,8 @@ def connected_components(
         prev_sum = cur_sum
     bidir.unpersist()
     if prev_handle is not None:
-        _CKPT_CACHE.setdefault(nodes.sparkSession, []).append(prev_handle)
+        ckpts = caches.entries(nodes.sparkSession, "llmops_ckpts")
+        ckpts[len(ckpts)] = prev_handle
     return labels, rounds
 
 
@@ -2502,7 +2466,7 @@ def i21_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: keyed, RELEASABLE persist (the plan references the counts
     # 4×; an anonymous .cache() here was never unpersisted — every i21
     # invocation pinned another copy for the session's lifetime)
-    per_session = _WC_CACHE.setdefault(spark, {})
+    per_session = caches.entries(spark, "llmops_wordcounts")
     sc = per_session.get(sf_dir)
     if sc is None:
         sc = (

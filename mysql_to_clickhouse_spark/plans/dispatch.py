@@ -49,8 +49,8 @@ for the session's lifetime, which is the dominant repeat cost at the
 table costs seconds to rebuild but broadcasts from cache in
 milliseconds). The cache is bounded by construction: it exists only
 because the probe proved ≤ broadcastRows rows. Hygiene: it is held
-until ``release_probe_state(spark)`` (same shared-session discipline
-as ``operators.llmops.release_caches``). The memo assumes the
+until ``session.release_all(spark)`` or ``release_probe_state(spark)``
+(the registry's ``dispatch_probes`` cache). The memo assumes the
 underlying files are immutable for the session (true for the
 testbed; a production deployment with in-session data growth should
 set ``spark.mysql2ch.join.probeMemo`` to false, or re-create the
@@ -72,11 +72,11 @@ comfortably inside a bench/cluster driver+executor; size
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from mysql_to_clickhouse_spark import caches
 
 __all__ = [
     "broadcast_when_small",
@@ -105,10 +105,6 @@ _ROWS_CONF = "spark.mysql2ch.join.broadcastRows"
 _FACT_GATE_DEFAULT = 1 << 29
 _ROWS_DEFAULT = 5_000_000
 _MEMO_CONF = "spark.mysql2ch.join.probeMemo"
-
-_PROBE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
 
 
 def fact_bytes_estimate(df: DataFrame) -> int:
@@ -190,7 +186,7 @@ def broadcast_when_small(
     key = None
     analyzed = None
     if memo_on:
-        memo = _PROBE_MEMO.setdefault(spark, {})
+        memo = caches.entries(spark, "dispatch_probes")
         analyzed = build._jdf.queryExecution().analyzed()
         key = (int(analyzed.semanticHash()), limit)
         hit = memo.get(key)
@@ -255,11 +251,8 @@ def _memo_put(memo: dict, key, entry) -> None:
 
 
 def release_probe_state(spark: SparkSession) -> None:
-    """Release everything this module holds for ``spark``: unpersist
-    any probe caches still alive (ACCEPT builds that never replayed)
-    and forget the memoized decisions. Long-lived shared sessions call
-    this between workloads — same discipline as
-    ``operators.llmops.release_caches``."""
-    for _decision, cached, _plan in _PROBE_MEMO.pop(spark, {}).values():
-        if cached is not None:
-            cached.unpersist(blocking=True)
+    """Unpersist the probe caches still alive for ``spark`` (ACCEPT
+    builds) and forget the memoized decisions, so the next invocation
+    re-probes. ``session.release_all`` drains this and every other
+    session cache."""
+    caches.release(spark, "dispatch_probes")

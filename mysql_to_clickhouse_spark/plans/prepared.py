@@ -12,10 +12,13 @@ story for repeated dashboard/report queries.
 ``prepared(spark, qid, sf_dir, builder)`` returns the session's cached
 DataFrame for ``(qid, sf_dir, layout-epoch)`` or builds, caches and
 returns it. The layout epoch is derived from the session's routed
-layouts (tables._BUCKET_ROUTES) plus the dim-cache switch, so ensuring
-or releasing a bucketed/flat/projection layout INVALIDATES every
-prepared plan built against the old physical design — a prepared plan
-must never outlive the layout decision it was planned for.
+layouts (the registry's ``bucket_routes``) plus the dim-cache switch,
+so ensuring or releasing a bucketed/flat/projection layout INVALIDATES
+every prepared plan built against the old physical design — a prepared
+plan must never outlive the layout decision it was planned for. The
+plans live in the registry's ``prepared_plans`` cache, so
+``session.release_all`` drops them all (e.g. after an ingest batch
+lands new files).
 
 Honesty note for benchmarks: a prepared replay hides per-invocation
 strategy costs (probe jobs, broadcast builds, AQE orchestration), so
@@ -27,23 +30,18 @@ x7 postmortem is why).
 from __future__ import annotations
 
 import os
-import weakref
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from mysql_to_clickhouse_spark import tables as _tables
-
-_PREPARED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+from mysql_to_clickhouse_spark import caches
 
 
 def layout_epoch(spark: SparkSession) -> frozenset:
     """A value that changes whenever the session's physical-layout
     routing changes (bucketed/flat/projection ensure/release, dim
     cache toggle) — the invalidation key for prepared plans."""
-    routes = _tables._BUCKET_ROUTES.get(spark, {})
+    routes = caches.entries(spark, "bucket_routes")
     dim_on = spark.conf.get("spark.mysql2ch.dimCache.enabled", "true")
     return frozenset(routes.items()) | {("__dimCache", dim_on)}
 
@@ -56,7 +54,7 @@ def prepared(
 ) -> DataFrame:
     """The session's prepared DataFrame for (qid, sf_dir) under the
     current layout epoch; built via ``builder()`` on first use."""
-    per_session = _PREPARED.setdefault(spark, {})
+    per_session = caches.entries(spark, "prepared_plans")
     key = (qid, os.path.abspath(sf_dir), layout_epoch(spark))
     df = per_session.get(key)
     if df is None:
@@ -69,12 +67,3 @@ def prepared(
             del per_session[stale]
         per_session[key] = df
     return df
-
-
-def invalidate(spark: SparkSession) -> int:
-    """Drop every prepared plan for the session (e.g. after an ingest
-    batch lands new files). Returns the number dropped."""
-    per_session = _PREPARED.setdefault(spark, {})
-    n = len(per_session)
-    per_session.clear()
-    return n

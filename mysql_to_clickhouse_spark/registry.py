@@ -133,16 +133,6 @@ _SENTINELS = (
     "j1_python_udf",
 )
 
-# IDs with NO green driver record in any round (r1 recorded d4 as an
-# error row; h7/i2 never sampled under the cap): pinned immediately
-# after the sentinels so the very next driver run finally records them
-# (r12/r13 verdict carried item). Remove once CORRECTNESS shows green.
-_PINNED_UNCHECKED = (
-    "d4_approx_distinct",
-    "h7_foreach_upsert",
-    "i2_minhash_neardup",
-)
-
 
 def _priority_order(registry: dict[str, Query]) -> list[str]:
     """Sentinels, then NEVER-driver-checked IDs, then the verified rest.
@@ -171,10 +161,6 @@ def _priority_order(registry: dict[str, Query]) -> list[str]:
         DRIVER_VERIFIED = frozenset()
 
     sentinels = [n for n in _SENTINELS if n in registry]
-    sentinels += [
-        n for n in _PINNED_UNCHECKED
-        if n in registry and n not in DRIVER_VERIFIED
-    ]
     placed = set(sentinels)
 
     def sub_key(n: str, q: Query) -> tuple:

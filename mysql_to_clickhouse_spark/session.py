@@ -41,6 +41,8 @@ import warnings
 
 from pyspark.sql import SparkSession
 
+from mysql_to_clickhouse_spark import caches
+
 # Spark caches compiled codegen classes in an LRU keyed by generated
 # source. Under LRU, a session that cycles through more distinct
 # classes than the cap evicts each class just before its next use, so
@@ -141,48 +143,10 @@ def build_session(
 
 
 def release_all(spark: SparkSession) -> dict[str, int]:
-    """Drain EVERY session-lifetime cache the engine holds for
-    ``spark``, from one place — the hygiene API a long-lived shared
-    session (or a rotating multi-tenant service) calls at a workload
-    boundary so no executor memory stays pinned.
-
-    Covers, in release order (caches that may reference other caches'
-    frames go first):
-
-    - prepared-plan registry (plans/prepared.py) — plans may reference
-      dim-cached or bucketed frames, so they drop before their inputs
-    - llmops MinHash signature frames + broadcast embedding matrices
-    - dispatch probe memo (persisted build-side probes)
-    - dimension cache (tables.load_dim persists)
-    - bucketed-route table (catalog routing, no pinned memory)
-
-    Returns a per-cache count of entries dropped, so callers (and the
-    hygiene test) can assert coverage. NEW session-lifetime caches MUST
-    be added here — tests/test_llmops.py asserts zero persisted RDDs
-    session-wide through this function, which is exactly the assertion
-    that caught the r11 dim-cache omission (shipped red because each
-    cache had its own release and the test only knew about two)."""
-    from mysql_to_clickhouse_spark import tables as _tables
-    from mysql_to_clickhouse_spark.operators import llmops as _llmops
-    from mysql_to_clickhouse_spark.plans import dispatch as _dispatch
-    from mysql_to_clickhouse_spark.plans import prepared as _prepared
-
-    counts: dict[str, int] = {}
-    counts["prepared_plans"] = _prepared.invalidate(spark)
-    n_sigs = len(getattr(_llmops, "_SIGS_CACHE", {}).get(spark, {}))
-    n_mat = len(getattr(_llmops, "_MATRIX_CACHE", {}).get(spark, {}))
-    n_wc = len(getattr(_llmops, "_WC_CACHE", {}).get(spark, {}))
-    n_ckpt = len(getattr(_llmops, "_CKPT_CACHE", {}).get(spark, []))
-    _llmops.release_caches(spark)
-    counts["llmops_sigs"] = n_sigs
-    counts["llmops_matrices"] = n_mat
-    counts["llmops_wordcounts"] = n_wc
-    counts["llmops_ckpts"] = n_ckpt
-    n_probe = len(getattr(_dispatch, "_PROBE_MEMO", {}).get(spark, {}))
-    _dispatch.release_probe_state(spark)
-    counts["dispatch_probes"] = n_probe
-    counts["dim_cache"] = _tables.release_dim_cache(spark)
-    n_routes = len(getattr(_tables, "_BUCKET_ROUTES", {}).get(spark, {}))
-    _tables.release_bucketed(spark)
-    counts["bucket_routes"] = n_routes
-    return counts
+    """Drain every session-lifetime cache the engine holds for
+    ``spark``: the one call a long-lived shared session (or a rotating
+    multi-tenant service) makes at a workload boundary so no executor
+    memory stays pinned. Returns the number of entries each cache held,
+    keyed by cache name; ``caches.py`` lists the caches, their drop
+    actions and the release order."""
+    return caches.release(spark)

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mysql_to_clickhouse_spark import caches
+
 TABLES = (
     "region",
     "nation",
@@ -35,7 +37,9 @@ DIM_TABLES = ("region", "nation", "customer", "supplier", "part")
 # testbed, real S3 round-trips at scale). The testdata is immutable, so
 # the DataFrame (a plan, not data) is safe to reuse per (session, dir,
 # table). Weak-keyed on the session so a stopped session's plans die
-# with it.
+# with it. Kept outside the session cache registry (caches.py) on
+# purpose: it pins no executor memory, and release_all dropping it would
+# add a listing and an analysis to the next load() of every table.
 import weakref
 
 _LOAD_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
@@ -122,10 +126,6 @@ BUCKET_KEYS = {
     "events": "user_id",
 }
 
-_BUCKET_ROUTES: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], str]]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def ensure_bucketed(
     spark: SparkSession,
@@ -157,7 +157,7 @@ def ensure_bucketed(
             )
     wh = warehouse or os.path.join(tempfile.gettempdir(), "m2c_layout_wh")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS m2c_layout LOCATION '{wh}'")
-    routes = _BUCKET_ROUTES.setdefault(spark, {})
+    routes = caches.entries(spark, "bucket_routes")
     out: dict[str, str] = {}
     for name in names:
         key = BUCKET_KEYS[name]
@@ -194,12 +194,6 @@ def ensure_bucketed(
         routes[(os.path.abspath(sf_dir), name)] = fq
         out[name] = fq
     return out
-
-
-def release_bucketed(spark: SparkSession) -> None:
-    """Stop routing this session's loads to bucketed copies (the files
-    and catalog entries stay for a later ensure_bucketed to reuse)."""
-    _BUCKET_ROUTES.pop(spark, None)
 
 
 def ensure_projection(
@@ -240,7 +234,7 @@ def ensure_projection(
             .mode("overwrite")
             .saveAsTable(fq)
         )
-    routes = _BUCKET_ROUTES.setdefault(spark, {})
+    routes = caches.entries(spark, "bucket_routes")
     routes[(os.path.abspath(sf_dir), name, key)] = fq
     return fq
 
@@ -306,7 +300,7 @@ def ensure_agg_projection(
             .mode("overwrite")
             .saveAsTable(fq)
         )
-    routes = _BUCKET_ROUTES.setdefault(spark, {})
+    routes = caches.entries(spark, "bucket_routes")
     routes[(os.path.abspath(sf_dir), name, f"agg:{proj}")] = fq
     return fq
 
@@ -319,7 +313,7 @@ def load_agg_projection(
     raw table, so correctness never depends on the layout."""
     import os
 
-    fq = _BUCKET_ROUTES.get(spark, {}).get(
+    fq = caches.entries(spark, "bucket_routes").get(
         (os.path.abspath(sf_dir), name, f"agg:{proj}")
     )
     return spark.table(fq) if fq is not None else None
@@ -434,7 +428,7 @@ def ensure_flat_lineitem(
             .mode("overwrite")
             .saveAsTable(fq)
         )
-    routes = _BUCKET_ROUTES.setdefault(spark, {})
+    routes = caches.entries(spark, "bucket_routes")
     routes[(os.path.abspath(sf_dir), "lineitem", "flat")] = fq
     routes[(os.path.abspath(sf_dir), "lineitem", "flat_path")] = loc
     return fq
@@ -460,7 +454,7 @@ def load_flat_lineitem(
     tasks → a handful of full ones). Identical rows either way."""
     import os
 
-    routes = _BUCKET_ROUTES.get(spark, {})
+    routes = caches.entries(spark, "bucket_routes")
     fq = routes.get((os.path.abspath(sf_dir), "lineitem", "flat"))
     if fq is None:
         return None
@@ -487,7 +481,7 @@ def load_clustered(
     straight off the scan instead of exchanging the table."""
     import os
 
-    fq = _BUCKET_ROUTES.get(spark, {}).get(
+    fq = caches.entries(spark, "bucket_routes").get(
         (os.path.abspath(sf_dir), name, key)
     )
     if fq is None:
@@ -513,11 +507,8 @@ def bucket_routed_key(spark: SparkSession, sf_dir: str, name: str) -> str | None
     TPC-H Q3 at 1e8 rows when the layout is active)."""
     import os
 
-    return (
-        BUCKET_KEYS[name]
-        if (os.path.abspath(sf_dir), name) in _BUCKET_ROUTES.get(spark, {})
-        else None
-    )
+    routes = caches.entries(spark, "bucket_routes")
+    return BUCKET_KEYS[name] if (os.path.abspath(sf_dir), name) in routes else None
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -565,12 +556,12 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ship_package(spark)
     import os as _os
 
-    routed = _BUCKET_ROUTES.get(spark, {}).get(
+    routed = caches.entries(spark, "bucket_routes").get(
         (_os.path.abspath(sf_dir), name)
     )
     per_session = _LOAD_CACHE.setdefault(spark, {})
     # routed loads cache under the table name so toggling the layout
-    # (ensure_bucketed / release_bucketed) never serves a stale plan
+    # (ensure_bucketed / release_all) never serves a stale plan
     key = (sf_dir, name, routed) if routed else (sf_dir, name)
     cached = per_session.get(key)
     if cached is not None:
@@ -605,15 +596,20 @@ def load_dim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pass through uncached — a dimension that outgrows the cache reads
     like any fact table — and ``spark.mysql2ch.dimCache.enabled=false``
     disables the path wholesale. At cluster scale the persisted blocks
-    live distributed on the executors, exactly like any Spark cache."""
+    live distributed on the executors, exactly like any Spark cache.
+
+    The entries live in the registry's ``dim_cache`` (caches.py) and
+    stay across queries until ``session.release_all`` drains them with
+    every other session cache; ``llmops.release_caches`` and
+    ``dispatch.release_probe_state`` leave them in place."""
     df = load(spark, sf_dir, name)
     if (
         spark.conf.get("spark.mysql2ch.dimCache.enabled", "true").lower()
         != "true"
     ):
         return df
-    per_session = _LOAD_CACHE.setdefault(spark, {})
-    key = (sf_dir, name, "__dimcache")
+    per_session = caches.entries(spark, "dim_cache")
+    key = (sf_dir, name)
     cached = per_session.get(key)
     if cached is not None:
         return cached
@@ -630,23 +626,6 @@ def load_dim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached.count()  # materialize now: the cost belongs to the cache fill
     per_session[key] = cached
     return cached
-
-
-def release_dim_cache(spark: SparkSession) -> int:
-    """Unpersist every dimension-cache entry for the session (the
-    llmops.release_caches hygiene shape). Deliberately NOT part of the
-    inter-query hygiene sweep — a dim cache exists to survive across
-    queries — but a long-lived service rotating datasets calls this at
-    the boundary. Returns the number of entries dropped."""
-    per_session = _LOAD_CACHE.get(spark, {})
-    keys = [k for k in per_session if len(k) == 3 and k[2] == "__dimcache"]
-    for k in keys:
-        try:
-            per_session[k].unpersist(blocking=True)
-        except Exception:
-            pass
-        del per_session[k]
-    return len(keys)
 
 
 # Post-load Spark dtypes per FIXTURES.md — the guard that turns testdata

@@ -13,8 +13,9 @@ import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-HEADER = '''"""IDs the verification driver has hash/rows-checked in ANY past
-round (union of CORRECTNESS_r*.json keys). Regenerated by
+HEADER = '''"""IDs the verification driver has hash/rows-checked, or run
+rows-only for want of an oracle, in ANY past round (union of
+CORRECTNESS_r*.json keys). Regenerated by
 scripts/gen_driver_history.py — do not edit by hand.
 
 The registry's priority order puts never-checked IDs ahead of these
@@ -25,11 +26,15 @@ DRIVER_VERIFIED = frozenset({
 '''
 
 
-def _is_green(rec: dict) -> bool:
-    """Only rows the driver actually VERIFIED count as history: an
-    error row (e.g. r1's d4 ``no_oracle``) or a row with neither hash
-    nor rows confirmed must stay in the never-checked tier so the
-    rotation sends it back under the cap (r12/r13 verdict item)."""
+def _is_recorded(rec: dict) -> bool:
+    """Rows the driver actually checked count as history. An oracle-
+    less ID can only ever get an ``err: "no_oracle"`` row, which still
+    records that it ran and how many rows it returned, so that row
+    counts. Any other error row, or a row with neither hash nor rows
+    confirmed, stays in the never-checked tier so the rotation sends
+    it back under the cap."""
+    if rec.get("err") == "no_oracle":
+        return rec.get("spark_rows") is not None
     if rec.get("err"):
         return False
     return bool(rec.get("hash_match") or rec.get("rows_match"))
@@ -40,7 +45,7 @@ def main() -> None:
     rounds = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
     for path in rounds:
         recs = json.load(open(path))
-        seen |= {k for k, v in recs.items() if _is_green(v)}
+        seen |= {k for k, v in recs.items() if _is_recorded(v)}
     out = HEADER
     for name in sorted(seen):
         out += f'    "{name}",\n'

@@ -13,11 +13,8 @@ from __future__ import annotations
 import pytest
 
 from mysql_to_clickhouse_spark.registry import all_queries
-from mysql_to_clickhouse_spark.tables import (
-    ensure_bucketed,
-    load,
-    release_bucketed,
-)
+from mysql_to_clickhouse_spark.caches import release
+from mysql_to_clickhouse_spark.tables import ensure_bucketed, load
 
 SF = "/root/testdata/sf0.01"
 QIDS = [
@@ -37,7 +34,7 @@ def bucketed(spark):
     try:
         yield ensure_bucketed(spark, SF, buckets=8)
     finally:
-        release_bucketed(spark)
+        release(spark, "bucket_routes")
 
 
 def test_parity_plain_vs_bucketed(spark):
@@ -52,7 +49,7 @@ def test_parity_plain_vs_bucketed(spark):
             got = sorted(map(tuple, qs[qid].fn(spark, SF).collect()))
             assert got == plain[qid], f"{qid} diverged under bucketed layout"
     finally:
-        release_bucketed(spark)
+        release(spark, "bucket_routes")
 
 
 def test_no_fact_exchange_on_orderkey(spark, bucketed):
@@ -82,7 +79,7 @@ def test_routing_is_reversible_and_cached_separately(spark):
         assert routed.schema == plain.schema
         assert routed.count() == plain.count()
     finally:
-        release_bucketed(spark)
+        release(spark, "bucket_routes")
     back = load(spark, SF, "lineitem")
     assert "m2c_layout" not in back._jdf.queryExecution().analyzed().toString()
 
@@ -103,7 +100,7 @@ def test_idempotent_reuse(spark):
         assert a == b
         assert os.path.getmtime(loc) == mtime, "second call rewrote the layout"
     finally:
-        release_bucketed(spark)
+        release(spark, "bucket_routes")
 
 
 def test_unknown_table_rejected(spark):
@@ -138,7 +135,7 @@ def test_custkey_projection(spark):
                 f"\n{plan}"
             )
     finally:
-        release_bucketed(spark)
+        release(spark, "bucket_routes")
     back = qs["e1_row_number"].fn(spark, SF)
     assert "m2c_layout" not in (
         back._jdf.queryExecution().analyzed().toString()
@@ -172,7 +169,7 @@ def test_events_bucketed_by_user_id(spark):
                     f"{qid} still shuffles the fact on user_id:\n{plan}"
                 )
     finally:
-        release_bucketed(spark)
+        release(spark, "bucket_routes")
 
 
 def test_agg_projection_d3_parity_and_plan(spark, tmp_path):
@@ -202,7 +199,7 @@ def test_agg_projection_d3_parity_and_plan(spark, tmp_path):
         assert fq.split(".")[-1] in plan  # reads the projection table
         assert "events.parquet" not in plan  # not the raw stream
     finally:
-        release_bucketed(spark)
+        release(spark, "bucket_routes")
     # route released -> raw path again
     assert load_agg_projection(spark, SF, "events", "day_user") is None
     back = sorted(
@@ -322,7 +319,7 @@ def test_flat_lineitem_mv_parity_and_plan(spark, tmp_path):
             f"{x14_plan}"
         )
     finally:
-        release_bucketed(spark)
+        release(spark, "bucket_routes")
     assert load_flat_lineitem(spark, SF) is None
     back = sorted(
         map(tuple, qs["x6_tpch_q10"].fn(spark, SF).collect())

@@ -3,22 +3,15 @@ plans/prepared.py (prepared-plan registry)."""
 
 from pyspark.sql import functions as F
 
-from mysql_to_clickhouse_spark.tables import (
-    load,
-    load_dim,
-    release_dim_cache,
-)
-from mysql_to_clickhouse_spark.plans.prepared import (
-    invalidate,
-    layout_epoch,
-    prepared,
-)
+from mysql_to_clickhouse_spark.caches import release
+from mysql_to_clickhouse_spark.tables import load, load_dim
+from mysql_to_clickhouse_spark.plans.prepared import layout_epoch, prepared
 
 from tests.conftest import TEST_SF_DIR
 
 
 def test_load_dim_identical_rows_and_single_instance(spark):
-    release_dim_cache(spark)
+    release(spark, "dim_cache")
     base = {tuple(r) for r in load(spark, TEST_SF_DIR, "nation").collect()}
     d1 = load_dim(spark, TEST_SF_DIR, "nation")
     assert {tuple(r) for r in d1.collect()} == base
@@ -26,18 +19,18 @@ def test_load_dim_identical_rows_and_single_instance(spark):
     d2 = load_dim(spark, TEST_SF_DIR, "nation")
     assert d2 is d1
     assert d1.storageLevel.useMemory
-    assert release_dim_cache(spark) >= 1
+    assert release(spark, "dim_cache")["dim_cache"] >= 1
     # after release the handle is unpersisted; the next call re-caches
     # (persist() returns the same DataFrame object, so identity holds)
     assert not d1.storageLevel.useMemory
     d3 = load_dim(spark, TEST_SF_DIR, "nation")
     assert d3.storageLevel.useMemory
     assert {tuple(r) for r in d3.collect()} == base
-    release_dim_cache(spark)
+    release(spark, "dim_cache")
 
 
 def test_load_dim_size_gate_passes_through(spark):
-    release_dim_cache(spark)
+    release(spark, "dim_cache")
     spark.conf.set("spark.mysql2ch.dimCache.maxBytes", "1")
     try:
         d = load_dim(spark, TEST_SF_DIR, "customer")
@@ -47,22 +40,22 @@ def test_load_dim_size_gate_passes_through(spark):
         assert d.count() == load(spark, TEST_SF_DIR, "customer").count()
     finally:
         spark.conf.unset("spark.mysql2ch.dimCache.maxBytes")
-        release_dim_cache(spark)
+        release(spark, "dim_cache")
 
 
 def test_load_dim_disabled_by_conf(spark):
-    release_dim_cache(spark)
+    release(spark, "dim_cache")
     spark.conf.set("spark.mysql2ch.dimCache.enabled", "false")
     try:
         d = load_dim(spark, TEST_SF_DIR, "region")
         assert not d.storageLevel.useMemory
     finally:
         spark.conf.unset("spark.mysql2ch.dimCache.enabled")
-        release_dim_cache(spark)
+        release(spark, "dim_cache")
 
 
 def test_prepared_caches_and_layout_epoch_invalidates(spark):
-    invalidate(spark)
+    release(spark, "prepared_plans")
     builds = []
 
     def builder():
@@ -87,11 +80,11 @@ def test_prepared_caches_and_layout_epoch_invalidates(spark):
     finally:
         spark.conf.unset("spark.mysql2ch.dimCache.enabled")
 
-    assert invalidate(spark) >= 1
+    assert release(spark, "prepared_plans")["prepared_plans"] >= 1
 
 
 def test_prepared_is_value_identical_to_fresh(spark):
-    invalidate(spark)
+    release(spark, "prepared_plans")
     from mysql_to_clickhouse_spark.registry import all_queries
 
     q = all_queries()["c10_star_multiway"]
@@ -103,5 +96,5 @@ def test_prepared_is_value_identical_to_fresh(spark):
     assert sorted(map(tuple, rep.collect())) == fresh
     # replay of the same handle, same values
     assert sorted(map(tuple, rep.collect())) == fresh
-    invalidate(spark)
-    release_dim_cache(spark)
+    release(spark, "prepared_plans")
+    release(spark, "dim_cache")

@@ -284,10 +284,8 @@ def test_release_probe_state_unpins_everything(spark):
     discipline): after release_probe_state nothing this module
     persisted survives and the memo is forgotten, so the next
     invocation re-probes."""
-    from mysql_to_clickhouse_spark.plans.dispatch import (
-        _PROBE_MEMO,
-        release_probe_state,
-    )
+    from mysql_to_clickhouse_spark.caches import entries
+    from mysql_to_clickhouse_spark.plans.dispatch import release_probe_state
 
     saved = _with_conf(spark, {_GATE: "0", _ROWS: "10000000"})
     try:
@@ -302,10 +300,10 @@ def test_release_probe_state_unpins_everything(spark):
         build = load(spark, TEST_SF_DIR, "orders").select("o_orderkey")
         out = broadcast_when_small(build, li, spark)
         assert out is not build  # accepted -> probe cache is alive
-        assert spark in _PROBE_MEMO and _PROBE_MEMO[spark]
+        assert entries(spark, "dispatch_probes")
 
         release_probe_state(spark)
-        assert spark not in _PROBE_MEMO
+        assert not entries(spark, "dispatch_probes")
         assert (
             spark.sparkContext._jsc.getPersistentRDDs().size()
             <= pinned_before
@@ -324,10 +322,8 @@ def test_probe_memo_hit_replays_from_build_cache(spark):
     serves the broadcast from the first invocation's materialized
     build cache — the executed plan reads an InMemoryTableScan, not a
     fresh evaluation of the build expression."""
-    from mysql_to_clickhouse_spark.plans.dispatch import (
-        _PROBE_MEMO,
-        release_probe_state,
-    )
+    from mysql_to_clickhouse_spark.caches import entries
+    from mysql_to_clickhouse_spark.plans.dispatch import release_probe_state
 
     saved = _with_conf(spark, {_GATE: "0", _ROWS: "10000000"})
     try:
@@ -339,7 +335,7 @@ def test_probe_memo_hit_replays_from_build_cache(spark):
 
         first = broadcast_when_small(build_df(), li, spark)
         (key, (decision, cached, plan0)) = next(
-            iter(_PROBE_MEMO[spark].items())
+            iter(entries(spark, "dispatch_probes").items())
         )
         assert decision is True and cached is not None
         assert plan0 is not None  # collision guard: plan stored with hit
@@ -361,10 +357,8 @@ def test_probe_memo_collision_falls_back_to_fresh_probe(spark):
     """A memo hit whose STORED plan is not sameResult as the incoming
     build (32-bit semanticHash collision) must NOT replay the cached
     build — it re-probes and serves the correct data."""
-    from mysql_to_clickhouse_spark.plans.dispatch import (
-        _PROBE_MEMO,
-        release_probe_state,
-    )
+    from mysql_to_clickhouse_spark.caches import entries
+    from mysql_to_clickhouse_spark.plans.dispatch import release_probe_state
 
     saved = _with_conf(spark, {_GATE: "0", _ROWS: "10000000"})
     try:
@@ -382,7 +376,7 @@ def test_probe_memo_collision_falls_back_to_fresh_probe(spark):
             int(build._jdf.queryExecution().analyzed().semanticHash()),
             limit,
         )
-        _PROBE_MEMO.setdefault(spark, {})[key] = (
+        entries(spark, "dispatch_probes")[key] = (
             True,
             wrong,
             wrong._jdf.queryExecution().analyzed(),
@@ -403,10 +397,8 @@ def test_probe_memo_collision_unpersists_displaced_cache(spark):
     release_probe_state iterates only CURRENT memo values, so a plain
     overwrite would leak the displaced cache until session end
     (ADVICE r9, plans/dispatch.py _memo_put)."""
-    from mysql_to_clickhouse_spark.plans.dispatch import (
-        _PROBE_MEMO,
-        release_probe_state,
-    )
+    from mysql_to_clickhouse_spark.caches import entries
+    from mysql_to_clickhouse_spark.plans.dispatch import release_probe_state
 
     saved = _with_conf(spark, {_GATE: "0", _ROWS: "10000000"})
     try:
@@ -422,7 +414,7 @@ def test_probe_memo_collision_unpersists_displaced_cache(spark):
             int(build._jdf.queryExecution().analyzed().semanticHash()),
             limit,
         )
-        _PROBE_MEMO.setdefault(spark, {})[key] = (
+        entries(spark, "dispatch_probes")[key] = (
             True,
             wrong,
             wrong._jdf.queryExecution().analyzed(),

@@ -135,29 +135,50 @@ def test_hot_lsh_bucket_pairs_bounded(spark, tmp_path):
 def test_release_caches_frees_persisted_state(spark):
     """After session.release_all(spark) NOTHING the engine persisted or
     broadcast survives — session-wide, through the one central hygiene
-    API, so a newly added session-lifetime cache that isn't wired into
-    release_all fails HERE instead of silently pinning executor memory
-    (r11 shipped exactly that: the dim cache had its own release but
-    this test only knew about two modules)."""
-    import mysql_to_clickhouse_spark.operators.llmops as llmops
+    API. The test fills all eight session caches itself, so what it
+    covers does not depend on which suites ran earlier; a cache that
+    release_all misses fails HERE instead of silently pinning executor
+    memory (r11 shipped exactly that: the dim cache had its own release
+    and this test only knew about two modules)."""
+    from mysql_to_clickhouse_spark.caches import entries
+    from mysql_to_clickhouse_spark.plans.prepared import prepared
     from mysql_to_clickhouse_spark.registry import all_queries
     from mysql_to_clickhouse_spark.session import release_all
+    from mysql_to_clickhouse_spark.tables import ensure_bucketed, load
+    from perfbench.workloads import RELEASE_KEYS
     from tests.conftest import SMOKE_SF_DIR
 
     qs = all_queries()
-    qs["i2_minhash_neardup"].fn(spark, SMOKE_SF_DIR).count()
-    qs["i3_cosine_pairs"].fn(spark, SMOKE_SF_DIR).count()
-    assert spark in llmops._SIGS_CACHE and spark in llmops._MATRIX_CACHE
+    for qid in (
+        "i2_minhash_neardup",  # llmops_sigs
+        "i3_cosine_pairs",  # llmops_matrices
+        "i16_semantic_components",  # llmops_ckpts
+        "i21_source_divergence",  # llmops_wordcounts
+    ):
+        qs[qid].fn(spark, SMOKE_SF_DIR).count()
+    # x6 reads its dims through load_dim (dim_cache) and its reduced
+    # side through broadcast_when_small (dispatch_probes); a zero
+    # fact-bytes gate opens the probe at the smoke scale
+    gate = "spark.mysql2ch.join.probeFactBytes"
+    spark.conf.set(gate, "0")
+    try:
+        qs["x6_tpch_q10"].fn(spark, SMOKE_SF_DIR).count()
+    finally:
+        spark.conf.unset(gate)
+    prepared(
+        spark, "t_hygiene", SMOKE_SF_DIR,
+        lambda: load(spark, SMOKE_SF_DIR, "nation"),
+    )
+    ensure_bucketed(spark, SMOKE_SF_DIR, names=("orders",), buckets=2)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() > 0
 
     counts = release_all(spark)
-    assert spark not in llmops._SIGS_CACHE
-    assert spark not in llmops._MATRIX_CACHE
-    assert counts["llmops_sigs"] >= 1
-    # the load-bearing assertion: zero persisted RDDs SESSION-WIDE —
-    # whatever other suites sharing this session persisted (dispatch
-    # probes, dim cache, prepared plans) must all drain through the
-    # one API
+    assert set(counts) == set(RELEASE_KEYS)
+    assert all(n >= 1 for n in counts.values()), counts
+    assert not entries(spark, "llmops_sigs")
+    assert not entries(spark, "llmops_matrices")
+    # the load-bearing assertion: zero persisted RDDs SESSION-WIDE,
+    # including whatever other suites sharing this session persisted
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
     # repeated release is a no-op, and the operators rebuild cleanly
     assert release_all(spark)["llmops_sigs"] == 0

@@ -9,18 +9,9 @@ from __future__ import annotations
 from mysql_to_clickhouse_spark._driver_history import DRIVER_VERIFIED
 from mysql_to_clickhouse_spark.registry import (
     _BASE_COUNTS,
-    _PINNED_UNCHECKED,
     _SENTINELS,
     all_queries,
 )
-
-# pinned-but-unchecked IDs currently leading the order (r14: the three
-# IDs with no green driver record in any round, placed right after the
-# sentinels so the next driver run finally records them)
-_PINNED_LIVE = tuple(
-    n for n in _PINNED_UNCHECKED if n not in DRIVER_VERIFIED
-)
-_HEAD = len(_SENTINELS) + len(_PINNED_LIVE)
 
 
 def test_sentinels_lead_and_cover_every_family():
@@ -29,8 +20,6 @@ def test_sentinels_lead_and_cover_every_family():
     assert {n[0] for n in names[:10]} == set(_BASE_COUNTS)
     # sentinels must be previously-green IDs, or they're not sentinels
     assert all(n in DRIVER_VERIFIED for n in _SENTINELS)
-    # the never-green pins follow immediately (driver finally sees them)
-    assert tuple(names[10:_HEAD]) == _PINNED_LIVE
 
 
 def test_50_prefix_rotates_onto_unchecked_ids():
@@ -41,11 +30,9 @@ def test_50_prefix_rotates_onto_unchecked_ids():
     # fewer than 40 unchecked IDs remain in the whole registry)
     unchecked_total = sum(1 for n in qs if n not in DRIVER_VERIFIED)
     assert len(fresh) == min(40, unchecked_total), fresh
-    # every capped driver row beyond the pinned trio is a hash check,
-    # not an err:"no_oracle" (the pins are rows-only by design — that
-    # rows-only record is exactly the missing evidence)
+    # every capped driver row is a hash check, not an err:"no_oracle"
     rows_only = [n for n in names if qs[n].oracle is None]
-    assert rows_only == list(_PINNED_LIVE), rows_only
+    assert rows_only == [], rows_only
 
 
 def test_unchecked_tier_is_family_balanced():
@@ -109,7 +96,7 @@ def test_oracle_first_within_family_and_tier():
     rows-only ones so any cap maximizes hash checks."""
     qs = all_queries()
     by_bucket: dict[tuple, list[str]] = {}
-    for n in list(qs)[_HEAD:]:
+    for n in list(qs)[len(_SENTINELS):]:
         tier = 1 if n in DRIVER_VERIFIED else 0
         by_bucket.setdefault((tier, n[0]), []).append(n)
     for bucket, fam_names in by_bucket.items():
