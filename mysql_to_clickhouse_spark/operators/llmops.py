@@ -284,73 +284,73 @@ def i2b_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Blocking key = source (the standard 'never all-pairs' move: compare
     within blocks only).
 
-    r14: intersection sizes come from an inverted index (explode the
-    shingle sets, equi-join postings on (source, shingle), count per
-    doc pair) instead of evaluating array_intersect on every blocked
-    pair. Exact same output: a pair appears iff it shares >= 1 shingle
-    (== the old inter > 0 gate), n_common counts DISTINCT shared
-    shingles because distinct_shingles already dedups per doc, and
-    every doc has >= 1 shingle at the FIXTURES domains (measured min 8)
-    so no emitted pair is lost. Cost moves from O(blocked pairs x
-    |A|+|B|) to O(sum df^2 per posting): at sf0.1 that is 385k joined
-    posting rows against 625k pairs, 91% of which shared nothing —
-    measured 14.9 s -> see OPTIMIZATION_r14.md. Shingles join as exact
-    strings (hashing them to int64 would trade exactness for bytes —
-    this op is i2's ground truth, so no collisions allowed)."""
+    Intersection sizes come from the shingle postings
+    (_shingle_overlaps): a pair appears iff it shares >= 1 shingle,
+    which is the oracle's n_common > 0 gate, and n_common counts each
+    shared shingle once because distinct_shingles dedups per doc.
+    Shingles join as exact strings (hashing them to int64 would trade
+    exactness for bytes — this op is i2's ground truth, so no
+    collisions allowed)."""
     sh = load(spark, sf_dir, "documents").select(
         "doc_id", "source", distinct_shingles("text").alias("shingles")
     )
-    common = _shingle_overlap_counts(sh)
-    sizes = sh.select("doc_id", F.size("shingles").cast("long").alias("n"))
-    n_common = F.col("n_common")
-    na, nb = F.col("n_a"), F.col("n_b")
-    return (
-        common.join(
-            sizes.select(
-                F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")
-            ),
-            "doc_a",
-        )
-        .join(
-            sizes.select(
-                F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")
-            ),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_common",
-            "n_a",
-            "n_b",
-            (n_common.cast("double") / (na + nb - n_common).cast("double"))
-            .alias("jaccard"),
-        )
+    n_common, na, nb = F.col("n_common"), F.col("n_a"), F.col("n_b")
+    return _shingle_overlaps(sh).select(
+        "doc_a",
+        "doc_b",
+        "n_common",
+        "n_a",
+        "n_b",
+        (n_common.cast("double") / (na + nb - n_common).cast("double"))
+        .alias("jaccard"),
     )
 
 
-def _shingle_overlap_counts(sh: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, n_common) for every same-source unordered pair
-    (doc_a < doc_b) sharing at least one shingle, via the inverted
-    index: explode to postings, self-equi-join on (source, shingle),
-    count rows per pair. Exact — inputs are distinct-shingle sets, so
-    each shared shingle contributes exactly one joined row."""
-    ex = sh.select("doc_id", "source", F.explode("shingles").alias("s"))
-    a, b = ex.alias("a"), ex.alias("b")
+def _shingle_overlaps(
+    left: DataFrame, right: DataFrame | None = None
+) -> DataFrame:
+    """(doc_a, doc_b, n_common, n_a, n_b) for every same-source pair
+    sharing at least one shingle, from (doc_id, source, shingles)
+    frames whose shingles are distinct per doc. Without ``right`` the
+    pairs come from ``left`` alone with doc_a < doc_b (each unordered
+    pair once); with it, doc_a is from ``left`` and doc_b from
+    ``right``.
+
+    Inverted index: explode each side to postings, equi-join them on
+    (source, shingle) and count joined rows per pair. Because each
+    side's shingles are distinct, every shared shingle contributes
+    exactly one joined row, so the count is |A ∩ B|. The set sizes
+    n_a/n_b ride the postings (constant per doc, recovered with max()),
+    so callers need no join back to the documents for them. A doc with
+    no shingles has no postings and appears in no pair.
+
+    Cost: O(Σ df²) joined rows, where df is one (source, shingle)
+    key's posting count, all landing on that key's task. A boilerplate
+    shingle shared by most of a source makes that one key quadratic;
+    the skew route for such keys (ROADMAP.md, the postings-primitive
+    direction) belongs here, so every shingle-overlap op gets it."""
+
+    def postings(sh: DataFrame, side: str) -> DataFrame:
+        return sh.select(
+            F.col("doc_id").alias(f"doc_{side}"),
+            "source",
+            F.size("shingles").cast("long").alias(f"n_{side}"),
+            F.explode("shingles").alias("s"),
+        ).alias(side)
+
+    a = postings(left, "a")
+    b = postings(left if right is None else right, "b")
+    on = [F.col("a.source") == F.col("b.source"), F.col("a.s") == F.col("b.s")]
+    if right is None:
+        on.append(F.col("doc_a") < F.col("doc_b"))
     return (
-        a.join(
-            b,
-            [
-                F.col("a.source") == F.col("b.source"),
-                F.col("a.s") == F.col("b.s"),
-                F.col("a.doc_id") < F.col("b.doc_id"),
-            ],
+        a.join(b, on)
+        .groupBy("doc_a", "doc_b")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_common"),
+            F.max("n_a").alias("n_a"),
+            F.max("n_b").alias("n_b"),
         )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
     )
 
 
@@ -2540,47 +2540,44 @@ def i22_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fire (mutual containment == exact dup). The containment ratio is
     one IEEE division, identically ordered on both engines.
 
-    r14: intersection sizes come from the same inverted index as i2b
-    (_shingle_overlap_counts) instead of array_intersect over every
-    blocked ordered pair; the directed view is the undirected overlap
-    list unioned with its own swap. Exact same output: theta > 0 means
-    every emitted pair shares >= 1 shingle, which is exactly the pairs
-    the index produces, and no fixture doc has an empty shingle set
-    (min 8 — so the n_contained = 0 NaN edge where the old and new
-    forms could differ is unreachable; the oracle hash checks this on
-    every drive)."""
+    Intersection sizes come from the same shingle postings as i2b
+    (_shingle_overlaps, exact-string join over distinct shingles, so
+    each shared shingle counts once). The directed view is each
+    undirected overlap plus its swap, both emitted from one pass (a
+    union would run the postings join once per branch). theta > 0
+    means every emitted pair shares >= 1 shingle, which is exactly the
+    pairs the postings produce. A doc with no shingles (fewer than 3 words)
+    has no postings, so it is never a contained_doc here; the oracle
+    agrees because DuckDB evaluates its 0.0/0.0 containment to NULL,
+    and NULL >= theta drops the pair
+    (tests/test_llmops.py::test_shingle_ops_empty_shingle_docs_vs_oracle)."""
     sh = load(spark, sf_dir, "documents").select(
         "doc_id", "source", distinct_shingles("text").alias("shingles")
     )
-    common = _shingle_overlap_counts(sh)
-    directed = common.select(
-        F.col("doc_a").alias("contained_doc"),
-        F.col("doc_b").alias("container_doc"),
+    directed = _shingle_overlaps(sh).select(
         "n_common",
-    ).unionAll(
-        common.select(
-            F.col("doc_b").alias("contained_doc"),
-            F.col("doc_a").alias("container_doc"),
-            "n_common",
-        )
-    )
-    sizes = sh.select(
-        F.col("doc_id").alias("contained_doc"),
-        F.size("shingles").cast("long").alias("n_contained"),
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.col(f"doc_{x}").alias("contained_doc"),
+                        F.col(f"doc_{y}").alias("container_doc"),
+                        F.col(f"n_{x}").alias("n_contained"),
+                    )
+                    for x, y in (("a", "b"), ("b", "a"))
+                ]
+            )
+        ),
     )
     containment = F.col("n_common").cast("double") / F.col(
         "n_contained"
     ).cast("double")
-    return (
-        directed.join(sizes, "contained_doc")
-        .filter(containment >= F.lit(_I22_THETA))
-        .select(
-            "contained_doc",
-            "container_doc",
-            "n_common",
-            "n_contained",
-            containment.alias("containment"),
-        )
+    return directed.filter(containment >= F.lit(_I22_THETA)).select(
+        "contained_doc",
+        "container_doc",
+        "n_common",
+        "n_contained",
+        containment.alias("containment"),
     )
 
 
@@ -4096,7 +4093,7 @@ def i38_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         F.md5("text").alias("h"),
-        distinct_shingles("text").alias("sh"),
+        distinct_shingles("text").alias("shingles"),
     )
     batch = with_h.filter(F.col("doc_id") % 5 == 0)
     corpus = with_h.filter(F.col("doc_id") % 5 != 0)
@@ -4106,45 +4103,20 @@ def i38_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("b.doc_id").alias("doc_id"))
         .agg(F.min(F.col("c.doc_id")).alias("exact_of"))
     )
-    # r14: bipartite inverted index (the §5b i2b/i22 pattern) instead of
-    # the source-blocked batch x corpus join with array_intersect per
-    # pair — that WAS all-pairs within each block, the exact quadratic
-    # the docstring promises to avoid (docs/STRESS_SHINGLES_r14.md is
-    # the measured law; this bipartite form measured old 27.8 s -> new
-    # 8.5 s at a 50k-doc single-source block and diverging, vs a ~0.4 s
-    # postings-machinery floor paid at sf0.1's 250-doc blocks).
-    # Postings equi-join on (source, shingle) and a count per
-    # (batch, corpus) pair produce exactly the pairs with n_common >= 1
-    # — exactly the old inter > 0 candidate set. Shingle-set sizes ride
-    # the postings (constant per doc, recovered with max()) so the
-    # jaccard gate needs no join back to the arrays; int arithmetic and
-    # the IEEE division are unchanged.
-    ex_b = batch.select(
-        F.col("doc_id").alias("b_id"), "source",
-        F.size("sh").alias("nb"), F.explode("sh").alias("s"),
-    )
-    ex_c = corpus.select(
-        F.col("doc_id").alias("c_id"), "source",
-        F.size("sh").alias("nc"), F.explode("sh").alias("s"),
-    )
-    counts = (
-        ex_b.join(ex_c, ["source", "s"])
-        .groupBy("b_id", "c_id")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_common"),
-            F.max("nb").alias("nb"),
-            F.max("nc").alias("nc"),
-        )
-    )
+    # near candidates are the bipartite shingle postings (exact-string
+    # join over distinct shingles, so each shared shingle counts once):
+    # exactly the batch x corpus pairs with n_common >= 1, the oracle's
+    # gate, without the all-pairs block join
     inter = F.col("n_common")
     near = (
-        counts.filter(
+        _shingle_overlaps(batch, corpus)
+        .filter(
             inter.cast("double")
-            / (F.col("nb") + F.col("nc") - inter).cast("double")
+            / (F.col("n_a") + F.col("n_b") - inter).cast("double")
             >= _I38_THETA
         )
-        .groupBy(F.col("b_id").alias("doc_id"))
-        .agg(F.min(F.col("c_id")).alias("near_of"))
+        .groupBy(F.col("doc_a").alias("doc_id"))
+        .agg(F.min(F.col("doc_b")).alias("near_of"))
     )
     return (
         batch.select("doc_id")

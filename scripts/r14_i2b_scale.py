@@ -98,8 +98,8 @@ def main() -> None:
         " only where its quadratic work is feasible (<= 50k docs = 1.25e9"
         " pairs); the growth column is the law. Digests (count +"
         " fixed-point sums over n_common/sizes/jaccard) must be equal at"
-        " every co-measured tier. i22 shares _shingle_overlap_counts, so"
-        " this law carries to it. Generated by scripts/r14_i2b_scale.py.",
+        " every co-measured tier. i22 and i38 share _shingle_overlaps, so"
+        " this law carries to them. Generated by scripts/r14_i2b_scale.py.",
         "",
         "| docs (1 block) | pairs | old (s) | new (s) | digests equal |",
         "|---|---|---|---|---|",

@@ -800,6 +800,94 @@ def test_incremental_ingest_verdicts(spark, tmp_path):
     assert set(out) == {5, 10, 15, 20}
 
 
+def test_shingle_ops_empty_shingle_docs_vs_oracle(spark, tmp_path):
+    """Docs of fewer than 3 words have no shingles, so the postings
+    never pair them. i2b, i22 and i38 must still hash-match their
+    DuckDB oracles on such docs. For i22 the agreement rests on
+    DuckDB's double division: its 0.0/0.0 containment for an empty
+    contained doc is NULL, and NULL >= theta drops the pair."""
+    import duckdb
+
+    from mysql_to_clickhouse_spark.registry import all_queries
+    from mysql_to_clickhouse_spark.verify import run_and_compare
+
+    base = (
+        "the quick brown fox jumps over the lazy dog while the cat "
+        "watches from the warm windowsill in the afternoon sun"
+    )
+    near = base.replace("afternoon", "evening")
+    rows = [
+        (1, base, "web"),          # corpus
+        (2, "two words", "web"),   # corpus, no shingles
+        (5, "tiny", "web"),        # batch, no shingles
+        (10, near, "web"),         # batch, near dup of 1
+        (13, near, "books"),       # corpus, another source
+    ]
+    sf = _docs_sf(spark, tmp_path, rows)
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW documents AS SELECT * "
+        f"FROM '{sf}/documents.parquet/*.parquet'"
+    )
+    queries = all_queries()
+    for name in (
+        "i2b_jaccard_exact",
+        "i22_containment_dedup",
+        "i38_incremental_ingest",
+    ):
+        res = run_and_compare(spark, con, queries[name], sf)
+        assert res.ok, (name, res)
+    con.close()
+
+
+def test_shingle_overlaps_hot_key_matches_brute_force(spark):
+    """One boilerplate 3-gram shared by 40 docs of one source (df 40,
+    far above any fixture's): self mode emits each unordered
+    same-source pair once, bipartite mode only left x right pairs,
+    with n_common/n_a/n_b equal to Python set intersection."""
+    from itertools import combinations
+
+    from mysql_to_clickhouse_spark.functions.text import distinct_shingles
+    from mysql_to_clickhouse_spark.operators.llmops import _shingle_overlaps
+
+    rows = [
+        (i, f"lorem ipsum dolor g{i % 4} h{i % 4} k{i % 4} tail{i} end{i}", "web")
+        for i in range(40)
+    ]
+    rows += [(100 + i, f"lorem ipsum dolor books{i} only{i}", "books") for i in range(5)]
+    sh = spark.createDataFrame(rows, "doc_id long, text string, source string").select(
+        "doc_id", "source", distinct_shingles("text").alias("shingles")
+    )
+    sets = {r.doc_id: (r.source, set(r.shingles)) for r in sh.collect()}
+
+    def expected(pairs):
+        out = {}
+        for a, b in pairs:
+            (src_a, sa), (src_b, sb) = sets[a], sets[b]
+            if src_a == src_b and sa & sb:
+                out[(a, b)] = (len(sa & sb), len(sa), len(sb))
+        return out
+
+    def got(df):
+        rows = df.collect()
+        keyed = {(r.doc_a, r.doc_b): (r.n_common, r.n_a, r.n_b) for r in rows}
+        assert len(keyed) == len(rows)  # no pair emitted twice
+        return keyed
+
+    self_pairs = expected(combinations(sorted(sets), 2))
+    assert got(_shingle_overlaps(sh)) == self_pairs
+    assert len(self_pairs) == 40 * 39 // 2 + 5 * 4 // 2
+
+    left = sh.filter(F.col("doc_id") % 5 == 0)
+    right = sh.filter(F.col("doc_id") % 5 != 0)
+    ids = sorted(sets)
+    bipartite = expected(
+        (a, b) for a in ids for b in ids if a % 5 == 0 and b % 5 != 0
+    )
+    assert got(_shingle_overlaps(left, right)) == bipartite
+    assert bipartite
+
+
 def test_leakage_free_split_keeps_neardups_together(spark, tmp_path):
     """A near-dup pair must NEVER straddle the train/validation
     boundary — the property that makes the split leakage-free."""

@@ -242,6 +242,17 @@ def test_x14_q21_no_triple_lineitem_scan(spark):
     assert 1 <= len(li_scans) <= 2, schemas
 
 
+@pytest.mark.parametrize("name", ["i2b_jaccard_exact", "i22_containment_dedup"])
+def test_shingle_ops_scan_documents_only_for_postings(spark, name):
+    """i2b and i22 read documents once per side of one postings join
+    and nowhere else: the shingle-set sizes ride the postings, so no
+    scan re-shingles documents to join sizes back, and i22 emits both
+    directions of a pair from one pass."""
+    df = QUERIES[name].fn(spark, TEST_SF_DIR)
+    schemas = scan_read_schemas(df)
+    assert len(schemas) == 2 and all("source" in s for s in schemas), schemas
+
+
 def test_i25_paragraph_dedup_two_shuffles(spark):
     """C4 paragraph dedup must cost exactly the chunk-key and doc-key
     exchanges — no window over the corpus, no extra repartition."""
