@@ -22,10 +22,12 @@ incremental-view-maintenance idea applied to the cell lists:
   cell lists and clear the tombstone set; serve results unchanged by
   construction, scan cost restored to ∝ live rows.
 - ``ivf_query``         — serve a bounded query batch from the index
-  alone: nearest ``nprobe`` centroids per query (broadcast against the
-  tiny centroid relation), then an exact cosine top-k over ONLY the
-  probed cells. The probed cell set is collected (≤ nq × nprobe ints)
-  and pushed as a literal partition filter, so the scan is
+  alone: nearest ``nprobe`` centroids per query (i4d's probe,
+  ``llmops._nearest_cells``), then an exact cosine top-k over ONLY the
+  probed cells, each cell scored as one numpy tile in
+  ``llmops._cosine_tiles``' "cells" topology and the per-cell winners
+  re-ranked once. The probed cell set is collected (≤ nq × nprobe
+  ints) and pushed as a literal partition filter, so the scan is
   partition-pruned at planning time — at 100 TB a 2-of-√n-cells probe
   reads ~2/√n of the index, not the corpus.
 
@@ -35,17 +37,19 @@ IVF-flat does). tests/test_ann_index.py plan-asserts both properties.
 
 Scale: build is one bounded-sample train + one broadcast-assign scan +
 one partitioned write; add is a broadcast-assign over the delta only;
-serve moves candidate rows only (|probed cells| of the corpus).
+serve shuffles the queries' probe rows and the probed cells' members
+once, into a cogroup on ``cell`` — candidate pairs never exist as rows.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mysql_to_clickhouse_spark.functions.vectors import cosine, rank_topk
+from mysql_to_clickhouse_spark.functions.vectors import cosine
+from mysql_to_clickhouse_spark.operators.llmops import _cosine_topk, _nearest_cells
 from mysql_to_clickhouse_spark.registry import register
 from mysql_to_clickhouse_spark.tables import load
 
@@ -239,39 +243,19 @@ def ivf_query(
     pick each query's ``nprobe`` cells, then the LIVE cell-list rows
     under a literal ``cell IN (...)`` filter — a static partition-
     pruned scan, anti-joined against any pending tombstones
-    (``ivf_delete``) so deleted vectors never serve.
-    Self-matches (query id present in the corpus) are excluded."""
+    (``ivf_delete``) so deleted vectors never serve. Each probed cell
+    scores its queries against its members in one tile (the i4d route,
+    ``_cosine_topk``'s "cells" topology). Self-matches (query id
+    present in the corpus) are excluded."""
     cents = spark.read.parquet(_centroids_path(index_dir))
-    q = queries.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea")
-    )
-    scored = q.join(F.broadcast(cents)).select(
-        "id_a", "ea", "cid", cosine("ea", "cvec").alias("ccos")
-    )
-    cw = Window.partitionBy("id_a").orderBy(F.desc("ccos"), F.asc("cid"))
-    probes = (
-        scored.withColumn("crk", F.row_number().over(cw))
-        .filter(F.col("crk") <= nprobe)
-        .select("id_a", "ea", F.col("cid").alias("cell"))
-    )
+    probes = _nearest_cells(queries.select("vec_id", "embedding"), cents, nprobe)
     # Bounded collect: ≤ nq × nprobe ints — the literal IN list is what
     # turns the cell scan into a planning-time partition prune.
     probed_cells = sorted(
         {r["cell"] for r in probes.select("cell").distinct().collect()}
     )
-    members = _live_members(spark, index_dir, probed_cells).select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("eb"),
-        "cell",
-    )
-    cand = (
-        probes.join(members, "cell")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("cos_sim", cosine("ea", "eb"))
-        .select("id_a", "id_b", "cos_sim")
-    )
-    return rank_topk(cand, k)
+    members = _live_members(spark, index_dir, probed_cells)
+    return _cosine_topk(probes, members, k, "cells")
 
 
 _SCRATCH_INDEX_DIRS: dict[str, str] = {}
@@ -328,7 +312,8 @@ def i4f_ann_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unlike i4d, the SERVE call never trains: centroids and cell lists
     come from parquet, and the candidate scan is partition-pruned to
     the probed cells (tests plan-assert both). Training is identical to
-    i4d's (deterministic sampled k-means), so the served result is
+    i4d's (deterministic sampled k-means) and serving runs i4d's probe
+    and per-cell tiles (``ivf_query``), so the served result is
     set-equal to the per-call route — the index artifact costs nothing
     in quality and removes the per-query train+assign scans.
     ``ivf_add`` grows the same artifact incrementally (delta-only

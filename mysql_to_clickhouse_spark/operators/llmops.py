@@ -536,13 +536,21 @@ _CHUNK_CELLS_DEFAULT = 16_000_000  # ~128 MB of float64 per live matrix
 def _chunk_rows_for(spark: SparkSession, n_table: int) -> int:
     """Streamed rows per kernel call so the tile's cosine matrix (plus
     its masked copy and the dgemm intermediate) stays bounded per
-    worker REGARDLESS of the Arrow batch size. Without this, the
-    default 10k-row Arrow batch against a 20k-vector broadcast makes
-    every worker hold multiple multi-GB matrices — 32 concurrent
-    workers beside a 30 GB JVM OOMed the 1e8-tier bench box. The bound
-    is the broadcast topologies' twin of the blocked topology's
-    ``spark.mysql2ch.cosine.blocks`` tile pin."""
-    cells = int(spark.conf.get(_CHUNK_CELLS_CONF, str(_CHUNK_CELLS_DEFAULT)))
+    worker REGARDLESS of the Arrow batch size or the cell size. Without
+    this, the default 10k-row Arrow batch against a 20k-vector
+    broadcast makes every worker hold multiple multi-GB matrices — 32
+    concurrent workers beside a 30 GB JVM OOMed the 1e8-tier bench
+    box."""
+    return _chunk_rows(_chunk_cells(spark), n_table)
+
+
+def _chunk_cells(spark: SparkSession) -> int:
+    return int(spark.conf.get(_CHUNK_CELLS_CONF, str(_CHUNK_CELLS_DEFAULT)))
+
+
+def _chunk_rows(cells: int, n_table: int) -> int:
+    """``_chunk_rows_for`` given the budget read on the driver — the
+    form a worker uses once it knows its cell's candidate count."""
     return max(64, cells // max(n_table, 1))
 
 
@@ -558,7 +566,7 @@ def _rechunk(batches, rows: int):
 
 
 # ---------------------------------------------------------------------------
-# _cosine_tiles — the one exact-cosine primitive (i3/i3c/i4/i4c/i4e/i8/i28)
+# _cosine_tiles — the one exact-cosine primitive (i3/i4/i4b/i4d/i4e/i4f/i8/i28)
 # ---------------------------------------------------------------------------
 # Every exact cosine operator is the quantized numpy kernel
 # (functions/vectors.np_fixed_cosines) run over (left rows × right rows)
@@ -573,17 +581,22 @@ def _rechunk(batches, rows: int):
 # - "queries": the bounded left side (a LIMITed query batch) is
 #   collected and broadcast; the right side is streamed once. Legal at
 #   any corpus size; a top-k is local to each streamed slice.
-# - "blocked": every row hashes into one of b blocks; the left side
-#   replicates each row across all b column-block ids, the right side
-#   vice versa; cogrouped applyInPandas computes each (row-block ×
-#   col-block) tile locally. Communication is O(n·b) rows through ONE
-#   shuffle (classic 2D-blocked matmul replication), nothing is
-#   collected to the driver, and b grows as sqrt(parallelism).
+# - "cells": both sides carry a caller-assigned ``cell`` key (an LSH
+#   bucket, an IVF cell); one cogroup on ``cell`` scores each cell's
+#   left rows against its right rows as one tile, slicing the left rows
+#   to the same _chunk_rows_for budget so one large cell cannot build
+#   an unbounded cosine matrix. Only rows sharing a cell are ever
+#   paired: ONE shuffle, nothing collected to the driver.
+#   "blocked" is its hash-keyed case: every row hashes into one of b
+#   blocks, the left side replicates each row across all b column
+#   blocks and the right side vice versa (_blocked_sides), so every
+#   (left, right) pair meets in exactly one cell — classic 2D-blocked
+#   matmul replication, O(n·b) rows shuffled, b ≈ sqrt(parallelism).
 #
 # Top-k (_cosine_topk) re-ranks with one window ONLY when the candidate
-# side is split across tiles ("queries", "blocked"); local selection and
-# the window share one total order (cos desc, id asc), so every global
-# winner survives its tile.
+# side is split across tiles ("queries", "cells", "blocked"); local
+# selection and the window share one total order (cos desc, id asc), so
+# every global winner survives its tile.
 #
 # DISPATCH: i3/i4 (and i28's eval side) pick "table" vs "blocked" by
 # the Catalyst-estimated size of the table (optimizedPlan stats —
@@ -632,19 +645,18 @@ def _n_blocks(spark: SparkSession) -> int:
 def _blocked_sides(
     left: DataFrame, right: DataFrame, b: int
 ) -> tuple[DataFrame, DataFrame]:
-    """Replicated block assignments for the 2D-blocked join: a left row
-    keeps its own block as ``ba`` and meets every ``bb``; a right row
-    keeps its own block as ``bb`` and meets every ``ba``.
-
-    So each (left, right) pair meets exactly once, in cogroup key
-    (left.block, right.block). For a self-join (the same frame on both
-    sides) the pairs emitter's id_a < id_b mask drops the mirrored
-    ordering, and same-block pairs meet only in the diagonal group."""
-    blocks = F.explode(F.array(*[F.lit(i) for i in range(b)]))
-    own = F.pmod(F.xxhash64("vec_id"), F.lit(b)).cast("int")
+    """The 2D-blocked cell keys: a left row in block ``i`` meets every
+    cell ``i·b + j``, a right row in block ``j`` meets every cell
+    ``i·b + j``, so each (left, right) pair meets in exactly one cell.
+    For a self-join (the same frame on both sides) the pairs emitter's
+    id_a < id_b mask drops the mirrored ordering, and same-block pairs
+    meet only in the diagonal cell."""
+    own = F.pmod(F.xxhash64("vec_id"), F.lit(b))
+    row = F.explode(F.array(*[own * b + j for j in range(b)]))
+    col = F.explode(F.array(*[own + i * b for i in range(b)]))
     return (
-        left.select("vec_id", "embedding", own.alias("ba"), blocks.alias("bb")),
-        right.select("vec_id", "embedding", blocks.alias("ba"), own.alias("bb")),
+        left.select("vec_id", "embedding", row.alias("cell")),
+        right.select("vec_id", "embedding", col.alias("cell")),
     )
 
 
@@ -672,9 +684,10 @@ def _cosine_tiles(
     sf_dir: str | None = None,
 ) -> DataFrame:
     """Run the exact cosine kernel over (left × right) tiles in one of
-    the topologies above ("table", "queries", "blocked") and return the
-    columns ``emit(left_ids, right_ids, cos)`` yields per tile, typed by
-    ``schema``. ``sf_dir`` keys the "table" topology's broadcast cache."""
+    the topologies above ("table", "queries", "cells", "blocked") and
+    return the columns ``emit(left_ids, right_ids, cos)`` yields per
+    tile, typed by ``schema``. "cells" sides carry a ``cell`` column;
+    ``sf_dir`` keys the "table" topology's broadcast cache."""
     import pandas as pd
 
     from mysql_to_clickhouse_spark.functions.vectors import np_fixed_cosines
@@ -683,21 +696,39 @@ def _cosine_tiles(
         return pd.DataFrame(emit(lt[0], rt[0], np_fixed_cosines(*lt[1:], *rt[1:])))
 
     spark = left.sparkSession
+    if strategy in ("cells", "blocked"):
+        if strategy == "blocked":
+            left, right = _blocked_sides(left, right, _n_blocks(spark))
+
+        def cell(_key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+            if lpdf.empty or rpdf.empty:  # a cell with no rows on one side
+                return pd.DataFrame()
+            # an index cell list can hold one id twice (ivf_add re-adding
+            # a tombstoned id); a candidate counts once
+            fixed = _np_block(rpdf.drop_duplicates("vec_id"))
+            rows = _chunk_rows(budget, len(fixed[0]))
+            return pd.concat(
+                [tile(_np_block(part), fixed) for part in _rechunk([lpdf], rows)]
+            )
+
+        budget = _chunk_cells(spark)
+        # fresh attribute ids per side: the sides may share lineage
+        # (i4d's members filter its probes), which the cogroup's
+        # self-join check would reject as ambiguous. One key type: each
+        # side hash-partitions its own key, and an int cell (a parquet
+        # partition column) hashes apart from the same long cell
+        cols = [
+            F.col("vec_id").alias("vec_id"),
+            F.col("embedding").alias("embedding"),
+            F.col("cell").cast("long").alias("cell"),
+        ]
+        return (
+            left.select(*cols).groupby("cell")
+            .cogroup(right.select(*cols).groupby("cell"))
+            .applyInPandas(cell, schema=schema)
+        )
     left = left.select("vec_id", "embedding")
     right = right.select("vec_id", "embedding")
-    if strategy == "blocked":
-
-        def block(_key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-            if lpdf.empty or rpdf.empty:  # a block with no rows on one side
-                return pd.DataFrame()
-            return tile(_np_block(lpdf), _np_block(rpdf))
-
-        ls, rs = _blocked_sides(left, right, _n_blocks(spark))
-        return (
-            ls.groupby("ba", "bb")
-            .cogroup(rs.groupby("ba", "bb"))
-            .applyInPandas(block, schema=schema)
-        )
     table = strategy == "table"
     if table:
         stream, bc = _spread(left), _broadcast_matrix(spark, right, sf_dir)
@@ -894,19 +925,11 @@ _LSH_TABLES = 3
 _LSH_PLANES = 3  # bits per table → 8 buckets/table; recall ≈ 1-(1-p^3)^3
 
 
-def _i4b_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate nearest neighbors via random-hyperplane LSH with
-    OR-amplification: 3 independent tables × 3 hyperplanes. Hyperplane
-    sign patterns are deterministic pseudo-random (xxhash64(table,
-    plane, dim) parity); a vector's bucket per table is the 3-bit sign
-    pattern of its hyperplane dots; candidates = same (table, bucket);
-    exact cosine top-3 over the deduped candidate set.
-
-    This is the 100 TB shape: per-table pair space shrinks ~2^planes,
-    buckets equi-join on their key (no all-pairs), and recall tunes
-    with tables (OR) × planes (AND). Rows-only (approximate); recall
-    vs exact i4 is unit-tested."""
-    emb = load(spark, sf_dir, "embeddings")
+def _lsh_cells(emb: DataFrame) -> DataFrame:
+    """Each vector once per LSH table, keyed by ``cell`` = (table,
+    bucket): the bucket is the 3-bit sign pattern of the vector's dots
+    with that table's hyperplanes, whose signs are deterministic
+    pseudo-random (xxhash64(table, plane, dim) parity)."""
 
     def hyperplane_dot(table: int, plane: int):
         signed = F.zip_with(
@@ -922,42 +945,33 @@ def _i4b_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return F.aggregate(signed, F.lit(0.0), lambda acc, v: acc + v)
 
-    def table_bucket(table: int):
+    def table_cell(table: int):
         bits = [
             F.when(hyperplane_dot(table, p) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
             for p in range(_LSH_PLANES)
         ]
-        return sum(bits[1:], start=bits[0])
+        return sum(bits, start=F.lit(table << _LSH_PLANES)).cast("long")
 
-    tables = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"), table_bucket(t).cast("long").alias("bucket")
-            )
-            for t in range(_LSH_TABLES)
-        ]
-    )
-    bucketed = emb.select(
-        "vec_id", "embedding", F.explode(tables).alias("tb")
-    ).select("vec_id", "embedding", "tb.tbl", "tb.bucket")
-    a = bucketed.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"),
-        "tbl", "bucket",
-    )
-    b = bucketed.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"),
-        "tbl", "bucket",
-    )
-    cand = (
-        a.join(b, ["tbl", "bucket"])
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "id_b", "ea", "eb")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    pairs = cand.withColumn("cos_sim", cosine("ea", "eb")).select(
-        "id_a", "id_b", "cos_sim"
-    )
-    return rank_topk(pairs, 3)
+    cells = F.array(*[table_cell(t) for t in range(_LSH_TABLES)])
+    return emb.select("vec_id", "embedding", F.explode(cells).alias("cell"))
+
+
+def _i4b_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate nearest neighbors via random-hyperplane LSH with
+    OR-amplification: 3 independent tables × 3 hyperplanes
+    (``_lsh_cells``); candidates = same (table, bucket); exact cosine
+    top-3 over the candidate set.
+
+    This is the 100 TB shape: per-table pair space shrinks ~2^planes,
+    only rows sharing a bucket are ever paired (``_cosine_tiles``'
+    "cells" topology, no all-pairs), and recall tunes with tables (OR)
+    × planes (AND). A pair sharing buckets in several tables surfaces
+    once per table, so the narrow candidate rows are deduped before
+    the one global re-rank. Rows-only (approximate); recall vs exact i4
+    is unit-tested."""
+    cells = _lsh_cells(load(spark, sf_dir, "embeddings"))
+    cand = _cosine_tiles(cells, cells, _topk_emit(3, False), _PAIRS_SCHEMA, "cells")
+    return rank_topk(cand.dropDuplicates(), 3)
 
 
 def _ann_bound_relation(
@@ -1093,48 +1107,40 @@ def _ivf_centroids(
     )
 
 
+def _nearest_cells(vectors: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame:
+    """Each vector's ``nprobe`` nearest centroid cells as (vec_id,
+    embedding, cell, crk), ranked by (cos desc, cid asc): one broadcast
+    cross join against the C-row centroid relation plus one window.
+    The IVF probe of both i4d and the persisted index (ann_index)."""
+    scored = vectors.join(F.broadcast(centroids)).select(
+        "vec_id", "embedding", "cid", cosine("embedding", "cvec").alias("ccos")
+    )
+    cw = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cid"))
+    return (
+        scored.withColumn("crk", F.row_number().over(cw))
+        .filter(F.col("crk") <= nprobe)
+        .select("vec_id", "embedding", F.col("cid").alias("cell"), "crk")
+    )
+
+
 def _i4d_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate nearest neighbors via an inverted file (IVF-flat),
     the other classic ANN scale path next to i4b's LSH: train C coarse
     centroids (deterministic sampled k-means, bounded driver sample —
     see _ivf_centroids), assign every vector to its nearest centroid
-    cell (one broadcast join, map-side), then let each query probe its
-    nprobe=2 nearest cells and score candidates exactly — a cell
-    equi-join, never all-pairs.
+    cell, let each query probe its nprobe=2 nearest cells
+    (``_nearest_cells``, map-side against the broadcast centroids),
+    and score each probed cell's members exactly in ``_cosine_tiles``'
+    "cells" topology — never all-pairs.
 
     Pair space shrinks ~C/nprobe ×; recall vs exact i4 is unit-tested,
     including on a skewed set where untrained centroids collapse
     (rows-only: approximate by construction). Output: top-3 neighbors
     per vector among probed candidates."""
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = _ivf_centroids(spark, emb)
-    # nearest + second-nearest centroid per vector, one broadcast join
-    scored = emb.join(F.broadcast(cents)).select(
-        "vec_id",
-        "embedding",
-        "cid",
-        cosine("embedding", "cvec").alias("ccos"),
-    )
-    cw = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cid"))
-    ranked = scored.withColumn("crk", F.row_number().over(cw))
-    members = ranked.filter(F.col("crk") == 1).select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("eb"),
-        F.col("cid").alias("cell"),
-    )
-    probes = ranked.filter(F.col("crk") <= _IVF_NPROBE).select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("ea"),
-        F.col("cid").alias("cell"),
-    )
-    cand = (
-        probes.join(members, "cell")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("cos_sim", cosine("ea", "eb"))
-        .select("id_a", "id_b", "cos_sim")
-    )
-    return rank_topk(cand, 3)
+    probes = _nearest_cells(emb, _ivf_centroids(spark, emb), _IVF_NPROBE)
+    members = probes.filter(F.col("crk") == 1)
+    return _cosine_topk(probes, members, 3, "cells")
 
 
 _I4D_FLOOR = 0.30  # measured 0.438 (sf0.01) / 0.387 (sf0.1)

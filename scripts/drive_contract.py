@@ -1,8 +1,10 @@
 """Driver simulation — the verify surface for this repo.
 
-Imports /root/repo/__spark_entry__.py the way the round driver does (by
-path, fresh process, its own SparkSession), runs the smoke entry and every
-declared query vs its DuckDB oracle with an order-insensitive value hash.
+Imports the ``__spark_entry__.py`` of the checkout this script lives in
+the way the round driver does (by path, fresh process, its own
+SparkSession), runs the smoke entry and every declared query vs its
+DuckDB oracle with an order-insensitive value hash. A copy of the script
+in another checkout drives that checkout's code.
 
 Usage: python scripts/drive_contract.py [--sf DIR] [--only NAME]
 """
@@ -10,6 +12,7 @@ import argparse
 import hashlib
 import importlib.util
 import time
+from pathlib import Path
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -33,7 +36,7 @@ def main():
     args = ap.parse_args()
 
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", Path(__file__).resolve().parents[1] / "__spark_entry__.py"
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -24,8 +24,10 @@ Checks per tier (all collect scalars or ≤ 64·k-row frames):
        for-row equality on the query slice (two independent kernels,
        one answer) ≤ --blocked-max;
   IVF  scaled probing (C=256 cells, nprobe=2, trained on the package's
-       bounded 4096-row sample): single-scan cell-masked kernel, edge
-       recall vs i4e ≥ 0.95 + measured candidate-fraction shrink;
+       bounded 4096-row sample) through the engine's IVF route (the
+       ``_nearest_cells`` probe, then ``_cosine_topk``'s "cells"
+       tiles): edge recall vs i4e ≥ 0.95 + measured candidate-fraction
+       shrink;
   i26  PQ-ADC cluster purity: every ADC neighbor in the query's own
        cluster ≥ 0.9 (within-cluster ORDER is beyond 4-bit PQ
        resolution by design, so purity — not edge recall — is the
@@ -107,19 +109,12 @@ def main() -> None:
 
     import tempfile
 
-    import numpy as np
     from pyspark.sql import functions as F
 
-    from mysql_to_clickhouse_spark.functions.vectors import (
-        np_fixed_cosines,
-        np_fixed_norms,
-        np_quantize,
-        rank_topk,
-    )
     from mysql_to_clickhouse_spark.operators.llmops import (
         _cosine_topk,
         _ivf_centroids,
-        _topk_emit,
+        _nearest_cells,
     )
     from mysql_to_clickhouse_spark.registry import all_queries
     from mysql_to_clickhouse_spark.session import build_session
@@ -243,7 +238,7 @@ def main() -> None:
             eq and len(lhs) == len(rhs) and len(lhs) > 0,
         )
 
-    # ---- IVF: scaled probing, single-scan cell-masked kernel -----------
+    # ---- IVF: scaled probing through the engine's cell tiles -----------
     # Cells must stay COARSER than the planted clusters (C <= K/4):
     # with C > K the sampled k-means drops several centroids INSIDE one
     # tight cluster, splitting its members across sub-cells that
@@ -252,86 +247,20 @@ def main() -> None:
     # unknown K; the stress exploits the known structure instead.
     ivf_c = min(IVF_CELLS, max(16, k_clusters // 4))
     t0 = time.time()
-    cents_np = np.array(
-        [
-            r["cvec"]
-            for r in _ivf_centroids(spark, emb, c=ivf_c)
-            .orderBy("cid")
-            .collect()
-        ],
-        dtype=np.float64,
-    )
-    q_rows = (
-        emb.filter(F.col("vec_id") % 31 == 7)
-        .orderBy("vec_id")
-        .limit(64)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    q_cells = np.argsort(-(Qn @ cents_np.T), axis=1)[:, :IVF_NPROBE]
-    # probe mask: probe_of[q, c] = query q probes cell c
-    probe_of = np.zeros((len(q_ids), len(cents_np)), dtype=bool)
-    probe_of[np.arange(len(q_ids))[:, None], q_cells] = True
-    q_quant = np_quantize(Q)
-    q_norms = np_fixed_norms(q_quant)
-    bc = spark.sparkContext.broadcast(
-        (q_ids, q_quant, q_norms, cents_np, probe_of)
-    )
-
-    emit_topk = _topk_emit(K_SERVE, ranked=False)
-
-    def ivf_local_topk(batches):
-        import pandas as pd
-
-        ids_q, quant_q, norms_q, cents, probes = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            X = np.array(list(pdf["embedding"]), dtype=np.float64)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            cells = np.argmax(Xn @ cents.T, axis=1)  # member assignment
-            v_quant = np_quantize(X)
-            v_norms = np_fixed_norms(v_quant)
-            cos = np_fixed_cosines(quant_q, norms_q, v_quant, v_norms)
-            # unprobed cells masked to -inf: the top-k emitter drops them
-            # like the self cell, so only probed candidates rank
-            cos_w = np.where(probes[:, cells], cos, -np.inf)
-            yield pd.DataFrame(emit_topk(ids_q, v_ids, cos_w))
-
-    cand = emb.select("vec_id", "embedding").mapInPandas(
-        ivf_local_topk, schema="id_a long, id_b long, cos_sim double"
-    )
-    ivf = rank_topk(cand, K_SERVE).toPandas()
+    vecs = emb.select("vec_id", "embedding")
+    cents = _ivf_centroids(spark, vecs, c=ivf_c)
+    queries = vecs.filter(F.col("vec_id") % 31 == 7).orderBy("vec_id").limit(64)
+    probes = _nearest_cells(queries, cents, IVF_NPROBE)
+    members = _nearest_cells(vecs, cents, 1)
+    ivf = _cosine_topk(probes, members, K_SERVE, "cells").toPandas()
     ivf_s = time.time() - t0
     ivf_edges = set(map(tuple, ivf[["id_a", "id_b"]].values))
     recall = len(exact_edges & ivf_edges) / max(len(exact_edges), 1)
     # pair-space shrink: candidate fraction = sum of probed-cell sizes / n
-    def assign_cells(batches):
-        import pandas as pd
-
-        cents = bc.value[3]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(list(pdf["embedding"]), dtype=np.float64)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            yield pd.DataFrame({"cell": np.argmax(Xn @ cents.T, axis=1)})
-
-    cell_counts = (
-        emb.select("vec_id", "embedding")
-        .mapInPandas(assign_cells, schema="cell long")
-        .groupBy("cell")
-        .count()
-        .toPandas()
-        .set_index("cell")["count"]
-    )
-    probed = sum(
-        int(cell_counts.get(int(c), 0)) for q in q_cells for c in q
-    ) / max(len(q_ids), 1)
+    cell_sizes = members.groupBy("cell").count()
+    probed = probes.join(cell_sizes, "cell").agg(
+        F.sum("count") / F.countDistinct("vec_id")
+    ).first()[0]
     record(
         f"ivf_recall(C={ivf_c},nprobe={IVF_NPROBE})",
         ivf_s,
@@ -382,8 +311,10 @@ def main() -> None:
     idx_recall = len(exact_edges & idx_edges) / max(len(exact_edges), 1)
     # incremental add: delta assign only, no retrain, index stays servable
     t0 = time.time()
+    q0 = queries.first()
+    q0_emb = [float(x) for x in q0["embedding"]]
     delta = spark.createDataFrame(
-        [(n + 1, [float(x) for x in Q[0]])], "vec_id long, embedding array<double>"
+        [(n + 1, q0_emb)], "vec_id long, embedding array<double>"
     )
     ivf_add(spark, idx_dir, delta)
     add_s = time.time() - t0
@@ -391,8 +322,7 @@ def main() -> None:
         spark,
         idx_dir,
         spark.createDataFrame(
-            [(int(q_ids[0]), [float(x) for x in Q[0]])],
-            "vec_id long, embedding array<double>",
+            [(int(q0["vec_id"]), q0_emb)], "vec_id long, embedding array<double>"
         ),
         k=1,
         nprobe=IVF_NPROBE,

@@ -274,3 +274,26 @@ def test_ivf_churn_cycle(spark, tmp_path, monkeypatch):
         (r["id_a"], r["id_b"], r["cos_sim"], r["rk"])
         for r in ivf_query(spark, d, queries, k=k).collect()
     }
+
+
+def test_ivf_query_uncoalesced_shuffle_matches(spark):
+    """The served rows do not depend on how the cogroup shuffle is
+    partitioned. The index's cell column reads back from the parquet
+    partition path as int while the probes' cell is a long; both sides
+    must hash one key type, or a cell's probes and members land in
+    different partitions once AQE stops coalescing them into one."""
+    fn = all_queries()["i4f_ann_index_serve"].fn
+
+    def rows():
+        return sorted(tuple(r) for r in fn(spark, SMOKE_SF_DIR).collect())
+
+    want = rows()
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        got = rows()
+    finally:
+        spark.conf.set(conf, prev)
+    assert len(want) == 5 * len({r[0] for r in want})
+    assert got == want

@@ -910,30 +910,89 @@ def test_leakage_free_split_keeps_neardups_together(spark, tmp_path):
 
 
 def test_broadcast_kernel_chunk_bound(spark):
-    """The broadcast-path kernels must be bit-identical under a forced
-    tiny chunk budget (many sub-batch kernel calls) — the per-worker
-    memory bound that keeps 32 concurrent workers resident beside the
-    JVM at bench scale must be a pure slicing choice, never a result
-    change."""
+    """The tile kernels must be bit-identical under a forced tiny chunk
+    budget (many sub-batch kernel calls) — the per-worker memory bound
+    that keeps 32 concurrent workers resident beside the JVM at bench
+    scale must be a pure slicing choice, never a result change. Covers
+    the broadcast path (i3, i4) and the blocked cogroup (i3c, i4c),
+    whose ~250-row groups at sf0.001 are sliced to the 64-row floor."""
     import mysql_to_clickhouse_spark.operators.llmops as llmops
     from mysql_to_clickhouse_spark.registry import all_queries
     from tests.conftest import SMOKE_SF_DIR
 
     qs = all_queries()
+    names = [
+        "i3_cosine_pairs", "i4_topk_similar",
+        "i3c_cosine_blocked", "i4c_topk_blocked",
+    ]
 
-    def sorted_pdf(df):
-        pdf = df.toPandas()
+    def sorted_pdf(name):
+        pdf = qs[name].fn(spark, SMOKE_SF_DIR).toPandas()
         return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
 
-    base_pairs = sorted_pdf(qs["i3_cosine_pairs"].fn(spark, SMOKE_SF_DIR))
-    base_topk = sorted_pdf(qs["i4_topk_similar"].fn(spark, SMOKE_SF_DIR))
+    base = {name: sorted_pdf(name) for name in names}
     # tiny cell budget -> chunk floor of 64 rows per kernel call
     spark.conf.set(llmops._CHUNK_CELLS_CONF, "1")
     try:
         assert llmops._chunk_rows_for(spark, 1000) == 64
-        chunk_pairs = sorted_pdf(qs["i3_cosine_pairs"].fn(spark, SMOKE_SF_DIR))
-        chunk_topk = sorted_pdf(qs["i4_topk_similar"].fn(spark, SMOKE_SF_DIR))
+        chunked = {name: sorted_pdf(name) for name in names}
     finally:
         spark.conf.unset(llmops._CHUNK_CELLS_CONF)
-    pd.testing.assert_frame_equal(base_pairs, chunk_pairs)
-    pd.testing.assert_frame_equal(base_topk, chunk_topk)
+    for name in names:
+        pd.testing.assert_frame_equal(base[name], chunked[name])
+
+
+def _lsh_sides(spark, sf_dir):
+    from mysql_to_clickhouse_spark.operators import llmops
+    from mysql_to_clickhouse_spark.tables import load
+
+    cells = llmops._lsh_cells(load(spark, sf_dir, "embeddings"))
+    return cells, cells
+
+
+def _ivf_sides(spark, sf_dir):
+    from mysql_to_clickhouse_spark.operators import llmops
+    from mysql_to_clickhouse_spark.tables import load
+
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    cents = llmops._ivf_centroids(spark, emb)
+    probes = llmops._nearest_cells(emb, cents, llmops._IVF_NPROBE)
+    return probes, probes.filter(F.col("crk") == 1)
+
+
+@pytest.mark.parametrize(
+    "name, sides",
+    [("_i4b_neighbors", _lsh_sides), ("_i4d_neighbors", _ivf_sides)],
+)
+def test_ann_cell_tiles_equal_sql_pair_reference(spark, name, sides):
+    """The ANN operators' per-cell numpy tiles give exactly the rows of
+    the SQL pair path they replaced: the same candidate pairs (rows
+    sharing a cell, self excluded, each pair once) built by an
+    equi-join, scored with the SQL ``cosine`` expression and ranked by
+    ``rank_topk``."""
+    from mysql_to_clickhouse_spark.functions.vectors import cosine, rank_topk
+    from mysql_to_clickhouse_spark.operators import llmops
+    from tests.conftest import SMOKE_SF_DIR
+
+    left, right = sides(spark, SMOKE_SF_DIR)
+    a = left.select(
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"), "cell"
+    )
+    b = right.select(
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"), "cell"
+    )
+    cand = (
+        a.join(b, "cell")
+        .filter(F.col("id_a") != F.col("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+        .select("id_a", "id_b", cosine("ea", "eb").alias("cos_sim"))
+    )
+
+    def sorted_pdf(df):
+        pdf = df.toPandas()
+        return pdf.sort_values(["id_a", "rk"]).reset_index(drop=True)
+
+    want = sorted_pdf(rank_topk(cand, 3))
+    got = sorted_pdf(getattr(llmops, name)(spark, SMOKE_SF_DIR))
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, want, check_exact=True)

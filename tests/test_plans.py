@@ -496,3 +496,30 @@ def test_s10_fill_join_broadcasts_aggregate_not_spine_shuffle(spark):
     assert "SortMergeJoin" not in plan, plan
     fmt = plan_of(df)
     assert "PushedFilters" in fmt and "event_type" in fmt, fmt
+
+
+@pytest.mark.parametrize("name", ["i4b", "i4d", "i4f"])
+def test_ann_ops_score_cells_in_one_cogroup(spark, name):
+    """The ANN operators pair candidates only inside one cogroup on the
+    bucket or cell key, scored by the numpy tile kernel: no equi-join
+    builds candidate pairs as rows. i4d and i4f keep only their
+    broadcast cross join against the centroids (i4d plans it once per
+    cogroup side: probes and members filter the same window)."""
+    from mysql_to_clickhouse_spark.operators.llmops import (
+        _i4b_neighbors,
+        _i4d_neighbors,
+    )
+
+    fn = {
+        "i4b": _i4b_neighbors,
+        "i4d": _i4d_neighbors,
+        "i4f": QUERIES["i4f_ann_index_serve"].fn,
+    }[name]
+    df = fn(spark, TEST_SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]  # AQE prints both plans
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+    for join in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
+        assert join not in plan, plan
+    assert ("BroadcastNestedLoopJoin" in plan) == (name != "i4b"), plan
