@@ -7,14 +7,17 @@ the *semantics* of each since the §2 operators landed (d5, d4, d6, d8,
 g4, g9, g2, g12); this module makes the *names* resolve, via two
 mechanisms chosen by what Spark can express:
 
-1. **Real function registration** (``register_ch_functions``): every
-   scalar CH name becomes a Spark SQL UDF — ``CREATE OR REPLACE
-   TEMPORARY FUNCTION name(args) RETURNS t RETURN <expr>``. Catalyst
-   inlines the body at analysis time, so these are plain Project
-   expressions under whole-stage codegen: zero Python, zero call
-   overhead, indistinguishable from writing the builtin directly. Once
-   registered, the names work in ANY ``spark.sql`` text for the
-   session, not just through the translator.
+1. **Real function registration**: a scalar CH name becomes a Spark
+   SQL UDF — ``CREATE OR REPLACE TEMPORARY FUNCTION name(args)
+   RETURNS t RETURN <expr>``. Catalyst inlines the body at analysis
+   time, so these are plain Project expressions under whole-stage
+   codegen: zero Python, zero call overhead, indistinguishable from
+   writing the builtin directly. ``ch_sql`` registers per statement:
+   only the names its translated text calls (plus the names their
+   bodies call), so a statement that calls none costs no CREATE.
+   ``register_ch_functions`` registers all of them at once, for
+   callers that write CH names in plain ``spark.sql`` text. Either
+   way a registered name stays for the session's life.
 
 2. **Dialect translation** (``translate_ch_sql``) for the forms Spark
    cannot register: aggregate names and -If combinators (SQL UDF
@@ -28,7 +31,8 @@ mechanisms chosen by what Spark can express:
    recursively, and any identifier it does not know passes through
    untouched — so mixed CH + Spark SQL text is fine.
 
-``ch_sql(spark, text)`` composes both: register, translate, run.
+``ch_sql(spark, text)`` composes both: translate, register what the
+statement calls, run.
 
 Semantics notes (the honest deltas, each carried in _NAME_MAP for the
 docs table):
@@ -772,21 +776,60 @@ _SCALAR_UDFS: dict[str, tuple[str, str, str]] = {
 
 _REGISTERED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
+# Spark resolves function names case-insensitively; no two names here
+# differ only in case, and none is a Spark builtin
+# (tests/test_chdialect.py pins both).
+_UDF_BY_LOWER = {n.lower(): n for n in _SCALAR_UDFS}
+
+_CALL_PAREN = _RE.compile(r"\s*\(")
+
+
+def _create_ch_function(spark: SparkSession, name: str) -> None:
+    params, rtype, body = _SCALAR_UDFS[name]
+    spark.sql(
+        f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{params} "
+        f"RETURNS {rtype} RETURN {body}"
+    )
+
 
 def register_ch_functions(spark: SparkSession) -> None:
-    """Register every scalar CH name on the session (idempotent).
+    """Register every scalar CH name on the session (idempotent), for
+    callers that write CH names in plain ``spark.sql`` text.
 
     These are SQL UDFs: Catalyst inlines the RETURN expression, so the
     registered names cost exactly what the equivalent builtin text
     costs — verified by tests/test_chdialect.py's codegen assertion."""
     if spark in _REGISTERED:
         return
-    for name, (params, rtype, body) in _SCALAR_UDFS.items():
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{params} "
-            f"RETURNS {rtype} RETURN {body}"
-        )
+    for name in _SCALAR_UDFS:
+        _create_ch_function(spark, name)
     _REGISTERED.add(spark)
+
+
+def _register_called_ch_functions(spark: SparkSession, *texts: str) -> None:
+    """Register the scalar CH names that ``texts`` call (a name followed
+    by '(' outside string literals and quoted identifiers), plus the
+    names their bodies call, skipping any the session catalog already
+    holds. Creation follows _SCALAR_UDFS order, so a body's callees
+    exist before it is analyzed. Text that calls none registers
+    nothing: each CREATE is a full parse and analysis, and its parser
+    state stays in the driver heap for the JVM's life."""
+    need: set[str] = set()
+    todo = [t for t in texts if t]
+    while todo:
+        sql = todo.pop()
+        for word, _start, end, _depth in _scan_words(sql):
+            called = word.lower()
+            if (
+                called in _UDF_BY_LOWER
+                and called not in need
+                and _CALL_PAREN.match(sql, end)
+            ):
+                need.add(called)
+                todo.append(_SCALAR_UDFS[_UDF_BY_LOWER[called]][2])
+    for name in _SCALAR_UDFS:
+        if name.lower() in need and not spark.catalog.functionExists(name):
+            _create_ch_function(spark, name)
 
 
 # ---------------------------------------------------------------------------
@@ -3213,7 +3256,8 @@ def ch_mutation(sql: str, df: "DataFrame") -> "DataFrame":
     executes, expressed as one scan).
 
     Loud scope: WHERE is mandatory (CH's own grammar), expressions run
-    through the dialect function pass, updating a column the frame
+    through the dialect function pass (and register the scalar CH
+    names they call, as ``ch_sql`` does), updating a column the frame
     does not have raises at analysis with the column named, and
     ``DELETE`` keeps NULL-condition rows (a NULL predicate deletes
     nothing — CH semantics, pinned in tests)."""
@@ -3250,6 +3294,7 @@ def ch_mutation(sql: str, df: "DataFrame") -> "DataFrame":
     cond = _translate_functions(rest[w_span[1]:].strip())
     if not cond:
         raise ValueError("empty WHERE condition")
+    _register_called_ch_functions(df.sparkSession, cond)
     # CH predicates are truthy integers ("WHERE 1" is the documented
     # unconditional idiom) — cast to boolean before the null-guard so
     # integer conditions work and NULL means "row not matched".
@@ -3282,6 +3327,7 @@ def ch_mutation(sql: str, df: "DataFrame") -> "DataFrame":
             else am.group(2)
         )
         expr = _translate_functions(am.group(3).strip())
+        _register_called_ch_functions(df.sparkSession, expr)
         if col not in df.columns:
             raise ValueError(
                 f"UPDATE column {col!r} not in the table "
@@ -3416,13 +3462,15 @@ def ch_sql(
     spark: SparkSession, text: str, params: dict | None = None
 ) -> DataFrame:
     """Run ClickHouse-dialect SQL text: bind ``{name:Type}`` query
-    parameters (if any), register the scalar CH names, translate the
-    unregistrable forms, hand the result to spark.sql (same Catalyst
-    path as every other query)."""
-    register_ch_functions(spark)
+    parameters (if any), translate the unregistrable forms, register
+    the scalar CH names the translated statement calls (and only
+    those), hand the result to spark.sql (same Catalyst path as every
+    other query)."""
     if params is not None:
         text = bind_params(_strip_sql_comments(text), params)
-    return spark.sql(translate_ch_sql(text))
+    sql = translate_ch_sql(text)
+    _register_called_ch_functions(spark, sql)
+    return spark.sql(sql)
 
 
 # ---------------------------------------------------------------------------

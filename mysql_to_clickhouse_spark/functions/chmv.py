@@ -55,10 +55,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mysql_to_clickhouse_spark.functions.chdialect import (
+    _register_called_ch_functions,
     _scan_string,
     _scan_words,
     _translate_functions,
-    register_ch_functions,
 )
 from mysql_to_clickhouse_spark.functions.numeric import SUM_SCALE, fixed_point
 
@@ -587,12 +587,20 @@ def create_materialized_view(
                 )
             keys.append((alias or expr.strip(), tr))
 
-    register_ch_functions(spark)  # keys/args may use CH scalar names
+    where = _translate_functions(where_txt) if where_txt else None
+    # keys, aggregate arguments and WHERE may call CH scalar names;
+    # register those (only) before any of them reaches F.expr
+    _register_called_ch_functions(
+        spark,
+        where,
+        *(tr for _, tr in keys),
+        *(t for a in aggs for t in (a.arg, a.cond)),
+    )
     return ChMaterializedView(
         name=name,
         target=target,
         keys=keys,
         aggs=aggs,
-        where=_translate_functions(where_txt) if where_txt else None,
+        where=where,
         spark=spark,
     )

@@ -14,7 +14,9 @@ incremental-view-maintenance idea applied to the cell lists:
 - ``ivf_add``           — assign a NEW vector batch against the
   persisted centroids (broadcast join, map-side) and append it to the
   cell lists. No retrain, no touch of existing rows — the IVM step.
-  Re-adding a tombstoned id clears its tombstone (CDC re-insert).
+  Re-adding a tombstoned id (CDC re-insert) compacts first, so the
+  id's old row is gone before its new one lands; the cell lists are
+  rewritten on that path only.
 - ``ivf_delete``        — tombstone a batch of ids (a4's CDC delete
   discipline): appended to ``<dir>/tombstones``, anti-joined at serve
   time, so deletes take effect immediately at delta cost.
@@ -132,18 +134,26 @@ def build_ivf_index(
 def ivf_add(spark: SparkSession, index_dir: str, new_vectors: DataFrame) -> None:
     """Append a vector batch to an existing index WITHOUT retraining:
     assign against the persisted centroids and append to the cell
-    lists. Existing index rows are never read or rewritten — the cost
-    is proportional to the delta, the incremental-view-maintenance
-    contract the k-family establishes for aggregates.
+    lists. Existing index rows are never read or rewritten (except on
+    the re-insert path below) — the cost is proportional to the delta,
+    the incremental-view-maintenance contract the k-family establishes
+    for aggregates.
 
-    CDC re-insert: an added id that was previously tombstoned becomes
-    servable again — its pending tombstone is cleared (one rewrite of
-    the tombstone set, cost ∝ |pending tombstones|, which compaction
-    keeps near zero; the cell lists are still never rewritten here)."""
+    CDC re-insert: when the batch re-adds a tombstoned id, the index
+    is compacted first (``ivf_compact``), which drops the id's old
+    cell-list row and clears every pending tombstone; the id then
+    serves from its new row alone, in the cell its new vector picks.
+    Only this path rewrites the cell lists (cost ∝ index size); the
+    check for it is one semi-join of the pending tombstones against
+    the batch ids, run only while tombstones are pending."""
     cents = spark.read.parquet(_centroids_path(index_dir))
     batch = new_vectors.select("vec_id", "embedding")
-    if _has_tombstones(index_dir):
-        _rewrite_tombstones_minus(spark, index_dir, batch.select("vec_id"))
+    if _has_tombstones(index_dir) and not (
+        spark.read.parquet(_tombstones_path(index_dir))
+        .join(batch.select("vec_id"), "vec_id", "left_semi")
+        .isEmpty()
+    ):
+        ivf_compact(spark, index_dir)
     (
         _assign_cells(batch, cents)
         .write.mode("append")
@@ -166,26 +176,6 @@ def ivf_delete(spark: SparkSession, index_dir: str, deleted_ids: DataFrame) -> N
         .write.mode("append")
         .parquet(_tombstones_path(index_dir))
     )
-
-
-def _rewrite_tombstones_minus(
-    spark: SparkSession, index_dir: str, ids: DataFrame
-) -> None:
-    """Replace the tombstone set with (tombstones ANTI-JOIN ids) via a
-    temp-dir swap (parquet cannot be overwritten while being read). On
-    a production object store this swap is a metastore pointer flip."""
-    import shutil
-
-    tpath = _tombstones_path(index_dir)
-    tmp = tpath + ".rewrite.tmp"
-    remaining = (
-        spark.read.parquet(tpath)
-        .join(ids.select("vec_id"), "vec_id", "left_anti")
-        .distinct()
-    )
-    remaining.coalesce(1).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(tpath)
-    os.rename(tmp, tpath)
 
 
 def _live_members(

@@ -331,12 +331,19 @@ def _shingle_overlaps(
     direction) belongs here, so every shingle-overlap op gets it."""
 
     def postings(sh: DataFrame, side: str) -> DataFrame:
-        return sh.select(
-            F.col("doc_id").alias(f"doc_{side}"),
-            "source",
-            F.size("shingles").cast("long").alias(f"n_{side}"),
-            F.explode("shingles").alias("s"),
-        ).alias(side)
+        # explode_outer + IS NOT NULL, not explode: from an inner
+        # explode Spark infers size(shingles) > 0 and pushes it below
+        # the projection, re-running the shingle lambdas per filter.
+        return (
+            sh.select(
+                F.col("doc_id").alias(f"doc_{side}"),
+                "source",
+                F.size("shingles").cast("long").alias(f"n_{side}"),
+                F.explode_outer("shingles").alias("s"),
+            )
+            .where(F.col("s").isNotNull())
+            .alias(side)
+        )
 
     a = postings(left, "a")
     b = postings(left if right is None else right, "b")

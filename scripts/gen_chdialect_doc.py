@@ -30,7 +30,10 @@ docstring for the full rationale):
 - **SQL UDF (inlined)** — a real registered function; Catalyst inlines
   the body at analysis time, so the name costs exactly what the builtin
   expression costs (no Python, full whole-stage codegen; plan-asserted
-  in tests/test_chdialect.py).
+  in tests/test_chdialect.py). `ch_sql` registers only the names its
+  translated statement calls (and the names their bodies call);
+  `register_ch_functions(spark)` registers every one, for plain
+  `spark.sql` text.
 - **translation** — aggregate names, -If combinators, the parametric
   `quantile(p)(x)` shape, `multiIf`, and typed casts cannot be
   registered (Spark SQL UDFs reject aggregate bodies); `ch_sql`

@@ -276,6 +276,38 @@ def test_ivf_churn_cycle(spark, tmp_path, monkeypatch):
     }
 
 
+def test_ivf_readd_changed_vector_keeps_one_live_row(spark, tmp_path):
+    """Re-adding a tombstoned id with a new vector leaves exactly one
+    live row for it, in the new vector's cell, so a query probing
+    every cell ranks the id at most once."""
+    emb = _emb(spark, SMOKE_SF_DIR)
+    d = str(tmp_path / "readd")
+    build_ivf_index(emb, d)
+    ann_index.ivf_delete(spark, d, spark.createDataFrame([(0,)], "vec_id long"))
+    old = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
+    negated = spark.createDataFrame(
+        [(0, [-x for x in old])], "vec_id long, embedding array<double>"
+    )
+    ivf_add(spark, d, negated)
+
+    cents = spark.read.parquet(ann_index._centroids_path(d))
+    want_cell = ann_index._assign_cells(negated, cents).collect()[0]["cell"]
+    live = ann_index._live_members(spark, d).filter("vec_id = 0").collect()
+    assert [r["cell"] for r in live] == [want_cell]
+
+    n = emb.count()
+    queries = spark.createDataFrame(
+        [(10_000_000, old), (10_000_001, [-x for x in old])],
+        "vec_id long, embedding array<double>",
+    )
+    served = ivf_query(spark, d, queries, k=n, nprobe=cents.count()).collect()
+    per_query = {}
+    for r in served:
+        if r["id_b"] == 0:
+            per_query[r["id_a"]] = per_query.get(r["id_a"], 0) + 1
+    assert per_query == {10_000_000: 1, 10_000_001: 1}
+
+
 def test_ivf_query_uncoalesced_shuffle_matches(spark):
     """The served rows do not depend on how the cogroup shuffle is
     partitioned. The index's cell column reads back from the parquet

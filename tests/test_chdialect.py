@@ -3,6 +3,9 @@ scalar-name registration, and the no-Python-UDF plan guarantee."""
 
 from __future__ import annotations
 
+import contextlib
+import datetime
+
 import pytest
 
 from mysql_to_clickhouse_spark.functions.chdialect import (
@@ -12,9 +15,10 @@ from mysql_to_clickhouse_spark.functions.chdialect import (
     register_ch_functions,
     translate_ch_sql,
 )
+from mysql_to_clickhouse_spark.registry import all_queries
 from mysql_to_clickhouse_spark.tables import load
 
-from tests.conftest import TEST_SF_DIR
+from tests.conftest import SMOKE_SF_DIR, TEST_SF_DIR
 
 
 # ---------------------------------------------------------------------------
@@ -1612,3 +1616,141 @@ def test_no_duplicate_dict_keys_in_dialect_module():
 def test_explain_statement_routed():
     with pytest.raises(ValueError, match="explain"):
         translate_ch_sql("EXPLAIN SELECT 1")
+
+
+# ---------------------------------------------------------------------------
+# per-statement registration: ch_sql creates only the names it calls
+# ---------------------------------------------------------------------------
+
+
+@contextlib.contextmanager
+def _ch_functions_dropped(spark, names=tuple(_SCALAR_UDFS)):
+    """Drop ``names`` from the session catalog and forget the whole-set
+    registration for the block, yielding the list of function names
+    each CREATE issued through ``spark.sql`` names; afterwards the
+    catalog and the whole-set flag are put back as they were."""
+    import re
+
+    from mysql_to_clickhouse_spark.functions.chdialect import _REGISTERED
+
+    had = {n for n in _SCALAR_UDFS if spark.catalog.functionExists(n)}
+    was_registered = spark in _REGISTERED
+    _REGISTERED.discard(spark)
+    for n in names:
+        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {n}")
+    real_sql = spark.sql
+    created: list[str] = []
+
+    def spy(text, *args, **kwargs):
+        m = re.match(r"\s*CREATE\b.*?\bFUNCTION\s+(\w+)", text, re.I | re.S)
+        if m:
+            created.append(m.group(1))
+        return real_sql(text, *args, **kwargs)
+
+    spark.sql = spy
+    try:
+        yield created
+    finally:
+        del spark.sql
+        for n in _SCALAR_UDFS:
+            exists = spark.catalog.functionExists(n)
+            if n in had and not exists:
+                params, rtype, body = _SCALAR_UDFS[n]
+                spark.sql(
+                    f"CREATE TEMPORARY FUNCTION {n}{params} "
+                    f"RETURNS {rtype} RETURN {body}"
+                )
+            elif n not in had and exists:
+                spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {n}")
+        if was_registered:
+            _REGISTERED.add(spark)
+
+
+def test_ch_sql_without_ch_calls_registers_nothing(spark):
+    """s16's translated statement calls no scalar CH name, so its
+    ch_sql issues no CREATE FUNCTION at all (whole-set registration
+    parsed all 166 on a session's first ch_sql)."""
+    fn = all_queries()["s16_ch_any_join"].fn
+    with _ch_functions_dropped(spark, names=()) as created:
+        fn(spark, SMOKE_SF_DIR).schema
+    assert created == []
+
+
+def test_ch_sql_registers_callee_closure(spark):
+    """A name whose body calls another scalar CH name registers both,
+    callee first, and nothing else."""
+    with _ch_functions_dropped(spark) as created:
+        row = ch_sql(
+            spark,
+            "SELECT parseDateTimeBestEffortOrNull('2020-05-17 10:11:12') "
+            "AS t, parseDateTimeBestEffortOrNull('garbage') AS bad",
+        ).collect()[0]
+    assert created == ["parseDateTimeBestEffort", "parseDateTimeBestEffortOrNull"]
+    assert row.t == datetime.datetime(2020, 5, 17, 10, 11, 12)
+    assert row.bad is None
+
+
+def test_ch_sql_registers_upper_case_call(spark):
+    """Spark resolves function names case-insensitively, so a call
+    spelled in another case registers the name too."""
+    with _ch_functions_dropped(spark) as created:
+        row = ch_sql(
+            spark, "SELECT TOSTARTOFMONTH(TIMESTAMP '2020-05-17 10:00:00') AS m"
+        ).collect()[0]
+    assert created == ["toStartOfMonth"]
+    assert row.m == datetime.date(2020, 5, 1)
+
+
+def test_ch_sql_ignores_names_in_string_literals(spark):
+    """A CH name inside a string literal or a quoted identifier is not
+    a call and registers nothing."""
+    with _ch_functions_dropped(spark) as created:
+        row = ch_sql(
+            spark, "SELECT 'toYYYYMM(ts)' AS `toYYYYMMDD(x)`"
+        ).collect()[0]
+        assert not spark.catalog.functionExists("toYYYYMM")
+    assert created == []
+    assert row[0] == "toYYYYMM(ts)"
+
+
+def test_scalar_udf_names_are_not_builtins(spark):
+    """Per-statement registration asks the catalog whether a name
+    exists; that is exact only while no scalar CH name is a Spark
+    builtin and no two differ only in case."""
+    lower = [n.lower() for n in _SCALAR_UDFS]
+    assert len(set(lower)) == len(lower)
+    builtins = {
+        r[0].lower() for r in spark.sql("SHOW SYSTEM FUNCTIONS").collect()
+    }
+    assert builtins and not set(lower) & builtins
+
+
+def test_register_ch_functions_registers_all(spark):
+    with _ch_functions_dropped(spark) as created:
+        register_ch_functions(spark)
+        missing = [n for n in _SCALAR_UDFS if not spark.catalog.functionExists(n)]
+    assert sorted(created) == sorted(_SCALAR_UDFS) and len(created) == 166
+    assert missing == []
+
+
+_CH_TEXT_ENTRIES = [
+    "s13_ch_dialect_report", "s13b_ch_dialect_json",
+    "s13c_ch_dialect_tokens", "s13d_ch_dialect_dates",
+    "s13e_ch_dialect_final", "s13f_ch_dialect_tranche2",
+    "s14_ch_limit_by", "s15_ch_sample_clause", "s16_ch_any_join",
+    "s17_ch_dialect_tranche3", "s18_ch_array_join",
+    "s19_ch_dialect_tranche4", "s20_ch_with_totals",
+    "s21_ch_dialect_tranche5", "s23_ch_mutations",
+    "s24_ch_dialect_tranche7", "s25_ch_dictionary",
+    "s26_ch_query_params", "s22_ch_create_mv", "s22b_ch_mv_quantile_state",
+]
+
+
+def test_ch_entries_need_no_prior_registration(spark):
+    """Every CH-text registry entry (ch_sql, ch_mutation and the MV
+    DDL) registers what it calls itself: with no scalar CH name in the
+    catalog, each builds and analyzes on its own."""
+    queries = all_queries()
+    with _ch_functions_dropped(spark):
+        for name in _CH_TEXT_ENTRIES:
+            assert queries[name].fn(spark, SMOKE_SF_DIR).schema.fields, name

@@ -253,6 +253,21 @@ def test_shingle_ops_scan_documents_only_for_postings(spark, name):
     assert len(schemas) == 2 and all("source" in s for s in schemas), schemas
 
 
+@pytest.mark.parametrize("name", ["i2b_jaccard_exact", "i22_containment_dedup"])
+def test_shingle_postings_no_inferred_size_filter(spark, name):
+    """The postings explode each side's shingle array once: no Filter
+    on size(array_distinct(...)) sits below the projection, which an
+    inner explode lets Spark infer and push down, evaluating the
+    shingle lambdas once more per filter."""
+    df = QUERIES[name].fn(spark, TEST_SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    bad = [
+        ln for ln in plan.splitlines()
+        if "Filter" in ln and "size(array_distinct(" in ln
+    ]
+    assert not bad, plan
+
+
 def test_i25_paragraph_dedup_two_shuffles(spark):
     """C4 paragraph dedup must cost exactly the chunk-key and doc-key
     exchanges — no window over the corpus, no extra repartition."""
