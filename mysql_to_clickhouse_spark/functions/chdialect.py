@@ -17,7 +17,8 @@ mechanisms chosen by what Spark can express:
    bodies call), so a statement that calls none costs no CREATE.
    ``register_ch_functions`` registers all of them at once, for
    callers that write CH names in plain ``spark.sql`` text. Either
-   way a registered name stays for the session's life.
+   way the session catalog is the only record of what is registered:
+   a name a user drops is created again by the next call that needs it.
 
 2. **Dialect translation** (``translate_ch_sql``) for the forms Spark
    cannot register: aggregate names and -If combinators (SQL UDF
@@ -55,10 +56,10 @@ docs table):
 from __future__ import annotations
 
 import re as _RE
-import weakref
-from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+
+from mysql_to_clickhouse_spark.streaming.cdc import EVENTS_FINAL, FinalSpec
 
 __all__ = [
     "register_ch_functions",
@@ -66,7 +67,6 @@ __all__ = [
     "translate_ch_sql",
     "ch_sql",
     "CH_FUNCTION_DOC",
-    "FinalSpec",
 ]
 
 
@@ -774,8 +774,6 @@ _SCALAR_UDFS: dict[str, tuple[str, str, str]] = {
     ),
 }
 
-_REGISTERED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
-
 # Spark resolves function names case-insensitively; no two names here
 # differ only in case, and none is a Spark builtin
 # (tests/test_chdialect.py pins both).
@@ -793,27 +791,33 @@ def _create_ch_function(spark: SparkSession, name: str) -> None:
 
 
 def register_ch_functions(spark: SparkSession) -> None:
-    """Register every scalar CH name on the session (idempotent), for
-    callers that write CH names in plain ``spark.sql`` text.
+    """Register every scalar CH name the session catalog lacks, for
+    callers that write CH names in plain ``spark.sql`` text. The
+    catalog is the only record, so a name dropped since the last call
+    is created again.
 
     These are SQL UDFs: Catalyst inlines the RETURN expression, so the
     registered names cost exactly what the equivalent builtin text
     costs — verified by tests/test_chdialect.py's codegen assertion."""
-    if spark in _REGISTERED:
-        return
+    _create_missing_ch_functions(spark, _UDF_BY_LOWER)
+
+
+def _create_missing_ch_functions(spark: SparkSession, need) -> None:
+    """Create each ``_SCALAR_UDFS`` name whose lower-case form is in
+    ``need`` and that the session catalog lacks, in ``_SCALAR_UDFS``
+    order, so a body's callees exist before it is analyzed."""
     for name in _SCALAR_UDFS:
-        _create_ch_function(spark, name)
-    _REGISTERED.add(spark)
+        if name.lower() in need and not spark.catalog.functionExists(name):
+            _create_ch_function(spark, name)
 
 
 def _register_called_ch_functions(spark: SparkSession, *texts: str) -> None:
     """Register the scalar CH names that ``texts`` call (a name followed
     by '(' outside string literals and quoted identifiers), plus the
     names their bodies call, skipping any the session catalog already
-    holds. Creation follows _SCALAR_UDFS order, so a body's callees
-    exist before it is analyzed. Text that calls none registers
-    nothing: each CREATE is a full parse and analysis, and its parser
-    state stays in the driver heap for the JVM's life."""
+    holds. Text that calls none registers nothing: each CREATE is a
+    full parse and analysis, and its parser state stays in the driver
+    heap for the JVM's life."""
     need: set[str] = set()
     todo = [t for t in texts if t]
     while todo:
@@ -827,9 +831,7 @@ def _register_called_ch_functions(spark: SparkSession, *texts: str) -> None:
             ):
                 need.add(called)
                 todo.append(_SCALAR_UDFS[_UDF_BY_LOWER[called]][2])
-    for name in _SCALAR_UDFS:
-        if name.lower() in need and not spark.catalog.functionExists(name):
-            _create_ch_function(spark, name)
+    _create_missing_ch_functions(spark, need)
 
 
 # ---------------------------------------------------------------------------
@@ -2247,51 +2249,34 @@ def _split_order_suffix(item: str) -> tuple[str, str]:
     return " ".join(words), sfx
 
 
-class FinalSpec(NamedTuple):
-    """ReplacingMergeTree read semantics for one replicated table:
-    latest version per key wins, delete-marked rows drop — what CH's
-    ``FINAL`` modifier resolves at read time."""
-
-    keys: tuple[str, ...]
-    order_by: str  # SQL ORDER BY text, highest version FIRST
-    delete_where: str | None = None  # predicate marking deleted rows
-
-
-_FINAL_SPECS: dict[str, FinalSpec] = {}
+_FINAL_SPECS: dict[str, FinalSpec] = {"events": EVENTS_FINAL}
 
 
 def register_final_spec(
     table: str,
     keys: tuple[str, ...] | list[str],
-    order_by: str,
-    delete_where: str | None = None,
+    versions: tuple[str, ...] | list[str],
+    deleted: str | None = None,
 ) -> None:
-    """Declare the CDC collapse rule ``FROM <table> FINAL`` expands to.
-    Mirrors configuring a ReplacingMergeTree's ORDER BY/version/
-    is_deleted columns when the table was created."""
-    _FINAL_SPECS[table] = FinalSpec(tuple(keys), order_by, delete_where)
-
-
-# The testbed's replicated stream (a4/x17's contract): events is the
-# row-image CDC table — user_id is the PK, (ts, event_id) the version,
-# event_type 'error' the delete marker.
-register_final_spec(
-    "events",
-    ("user_id",),
-    "unix_micros(ts) DESC, event_id DESC",
-    "event_type = 'error'",
-)
+    """Declare the CDC collapse rule ``FROM <table> FINAL`` expands to:
+    the ``streaming.cdc.FinalSpec`` of ``keys``, the version SQL
+    expressions (highest first, each ranked descending) and the
+    tombstone predicate. Mirrors configuring a ReplacingMergeTree's
+    ORDER BY/version/is_deleted columns when the table was created.
+    ``events`` is registered with ``EVENTS_FINAL``, the rule the
+    DataFrame operators apply."""
+    _FINAL_SPECS[table] = FinalSpec(tuple(keys), tuple(versions), deleted)
 
 
 def _final_subquery(table: str, spec_name: str, alias: str) -> str:
+    """``streaming.cdc.final`` of ``spec_name``'s spec as SQL text."""
     spec = _FINAL_SPECS[spec_name]
-    drop = (
-        f" AND NOT ({spec.delete_where})" if spec.delete_where else ""
-    )
+    order_by = ", ".join(f"{v} DESC" for v in spec.versions)
+    drop = f" AND NOT ({spec.deleted})" if spec.deleted else ""
     return (
         f"(SELECT * EXCEPT (__rn) FROM ("
         f"SELECT *, ROW_NUMBER() OVER ("
-        f"PARTITION BY {', '.join(spec.keys)} ORDER BY {spec.order_by}"
+        f"PARTITION BY {', '.join(spec.keys)} ORDER BY {order_by}"
         f") AS __rn FROM {table}"
         f") WHERE __rn = 1{drop}) {alias}"
     )
@@ -3533,8 +3518,8 @@ CH_FUNCTION_DOC: list[tuple[str, str, str]] = (
         ),
         (
             "FINAL",
-            "statement: FROM <t> FINAL -> latest-per-key collapse "
-            "(per-table FinalSpec)",
+            "statement: FROM <t> FINAL -> latest-per-key collapse, "
+            "tombstones dropped (the table's streaming.cdc FinalSpec)",
             "a4 CDC apply",
         ),
         (

@@ -19,6 +19,11 @@ from pyspark.sql import functions as F
 
 from mysql_to_clickhouse_spark.functions.numeric import dsum, o_dsum
 from mysql_to_clickhouse_spark.registry import register
+from mysql_to_clickhouse_spark.streaming.cdc import (
+    CDC_STATE_FINAL,
+    collapse,
+    drop_deleted,
+)
 from mysql_to_clickhouse_spark.tables import load
 
 _US_PER_MIN = 60_000_000
@@ -343,9 +348,10 @@ def h6_stateful_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def h7_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The foreachBatch CDC apply loop, simulated deterministically:
-    events split into 6 time slices; each slice merges into the state as
-    'latest version per user_id wins' (a4 semantics per micro-batch).
-    Tombstones filter on the final read (FINAL-style).
+    events split into 6 time slices; each slice merges into the state
+    by ``streaming.cdc.CDC_STATE_FINAL``, the rule the real stream's
+    merge applies, so the simulation cannot drift from it. Tombstones
+    stay in state and drop on the final read.
 
     The result must equal the single-shot a4_cdc_apply_latest — asserted
     in tests/test_streaming.py together with the true writeStream+
@@ -358,10 +364,6 @@ def h7_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    # the SAME dedup the real stream applies per micro-batch — shared so
-    # the batch simulation can never drift from streaming/cdc semantics
-    from mysql_to_clickhouse_spark.streaming.cdc import _latest_per_key
-
     bounds = ev.agg(F.min("ts_us"), F.max("ts_us")).first()
     lo, hi = int(bounds[0]), int(bounds[1]) + 1
     step = (hi - lo) // 6 + 1
@@ -372,11 +374,9 @@ def h7_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("ts_us") >= lo + i * step) & (F.col("ts_us") < lo + (i + 1) * step)
         )
         state = batch if state is None else state.unionByName(batch)
-        state = _latest_per_key(state)
-    return (
-        state.filter(F.col("event_type") != "error")
-        .select("user_id", "event_id", "ts_us", "event_type", "value")
-        
+        state = collapse(state, CDC_STATE_FINAL)
+    return drop_deleted(state, CDC_STATE_FINAL).select(
+        "user_id", "event_id", "ts_us", "event_type", "value"
     )
 
 

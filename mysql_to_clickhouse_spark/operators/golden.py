@@ -20,6 +20,7 @@ from mysql_to_clickhouse_spark.plans.dispatch import (
 )
 from mysql_to_clickhouse_spark.plans.prefix import running_sums_keyed
 from mysql_to_clickhouse_spark.registry import register
+from mysql_to_clickhouse_spark.streaming.cdc import EVENTS_FINAL, final
 from mysql_to_clickhouse_spark.tables import (
     bucket_routed_key,
     load,
@@ -1180,7 +1181,7 @@ ORDER BY c_mktsegment
 def x17_replication_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The category's end-to-end story in one query: the CDC stream
     (events as versioned row images) collapses to ReplacingMergeTree
-    FINAL state (a4's latest-per-key, deletes filtered), the surviving
+    FINAL state (``streaming.cdc.EVENTS_FINAL``, as in a4), the surviving
     entities enrich against the replicated customer dimension
     (broadcast — h13's stream-static topology, batch form), and the
     report aggregates per segment. This is what a mysql-to-clickhouse
@@ -1199,18 +1200,9 @@ def x17_replication_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     cust = broadcast_when_small(cust, ev, spark)
-    w = Window.partitionBy("user_id").orderBy(
-        F.unix_micros("ts").desc(), F.col("event_id").desc()
-    )
-    final = (
-        ev.select(
-            "user_id", "value", "event_type",
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter((F.col("rn") == 1) & (F.col("event_type") != "error"))
-    )
     return (
-        final.withColumn("c_key", F.pmod(F.col("user_id"), F.lit(1500)) + 1)
+        final(ev, EVENTS_FINAL)
+        .withColumn("c_key", F.pmod(F.col("user_id"), F.lit(1500)) + 1)
         .join(cust, F.col("c_key") == F.col("c_custkey"))
         .groupBy("c_mktsegment")
         .agg(

@@ -2052,28 +2052,85 @@ _MG_CAPACITY = 256  # per-partition counter budget
 _TOPK_GRAMS = 10
 
 
-def _mg_partition_summaries(batches, capacity: int):
-    """Misra-Gries over one partition's stream of grams: at most
-    `capacity` counters survive; every surviving estimate undercounts
-    its true partition frequency by at most n_part/(capacity+1) and
-    never overcounts. Yields ONE summary frame per partition."""
+def _mg_partition_summaries(
+    batches, capacity: int, key: str = "gram", weight: str | None = None
+):
+    """Weighted Misra-Gries over one partition's stream of ``key``
+    values, each weighing its ``weight`` column (1 when None): an insert
+    at full capacity subtracts the minimum counter from ALL counters
+    (evicting zeros), so each surviving estimate undercounts its true
+    partition weight by at most W_part/(capacity+1) and never
+    overcounts. With unit weights this is the classic counting sketch.
+    Integral weights keep every comparison exact. Yields ONE summary
+    frame per partition."""
+    import itertools
+
     import pandas as pd
 
-    counters: dict[str, int] = {}
+    counters: dict = {}
     for pdf in batches:
-        for g in pdf["gram"]:
-            if g in counters:
-                counters[g] += 1
-            elif len(counters) < capacity:
-                counters[g] = 1
+        ws = pdf[weight] if weight else itertools.repeat(1)
+        for k, w in zip(pdf[key], ws):
+            w = int(w)
+            if w <= 0:
+                continue
+            if k in counters or len(counters) < capacity:
+                counters[k] = counters.get(k, 0) + w
             else:
-                dead = [k for k in counters if counters[k] == 1]
-                for k in counters:
-                    counters[k] -= 1
-                for k in dead:
-                    del counters[k]
-    yield pd.DataFrame(
-        {"gram": list(counters), "est": list(counters.values())}
+                counters[k] = w
+                m = min(counters.values())
+                counters = {c: v - m for c, v in counters.items() if v > m}
+    yield pd.DataFrame({key: list(counters), "est": list(counters.values())})
+
+
+def _mg_estimates(
+    items: DataFrame, key: str, weight: str | None, capacity: int
+) -> DataFrame:
+    """Per-``key`` sums (column ``est``) of the per-partition Misra-Gries
+    summaries: the shuffle carries ≤ capacity rows per partition."""
+
+    def summarize(batches):
+        yield from _mg_partition_summaries(batches, capacity, key, weight)
+
+    key_type = items.schema[key].dataType.simpleString()
+    return (
+        items.mapInPandas(summarize, schema=f"{key} {key_type}, est long")
+        .groupBy(key)
+        .agg(F.sum("est").alias("est"))
+    )
+
+
+def _mg_topk_bound(
+    items: DataFrame, key: str, weight: str | None, capacity: int, k: int,
+    exact_name: str,
+) -> DataFrame:
+    """The sketch made SQL-checkable (the d4b pattern): the exact top-k
+    ``key`` values by total weight, each with the Misra-Gries merge
+    guarantees as booleans — summed partition estimates never exceed
+    the exact weight, and fall short of it by at most total
+    weight/(capacity+1). Both hold for ANY partitioning (the MG merge
+    theorem), so the row hash is stable although the estimates are
+    partition-dependent."""
+    w = F.col(weight) if weight else F.lit(1)
+    exact = items.groupBy(key).agg(F.sum(w).cast("bigint").alias(exact_name))
+    rank = Window.orderBy(F.desc(exact_name), key)
+    topk = exact.select(
+        key, exact_name, F.row_number().over(rank).alias("rk")
+    ).filter(F.col("rk") <= k)
+    total = items.agg(F.sum(w).alias("w_total"))
+    short = F.col(exact_name) - F.coalesce("est", F.lit(0))
+    return (
+        topk.join(_mg_estimates(items, key, weight, capacity), key, "left")
+        .crossJoin(F.broadcast(total))
+        .select(
+            key,
+            exact_name,
+            (short >= 0).alias("sketch_never_over"),
+            (short <= F.col("w_total") / (capacity + 1)).alias(
+                "sketch_within_bound"
+            ),
+        )
+        .orderBy(F.desc(exact_name), key)
     )
 
 
@@ -2105,14 +2162,9 @@ def i17_topk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select(
         F.explode(word_shingles("text", 2)).alias("gram")
     )
-
-    def summarize(batches):
-        yield from _mg_partition_summaries(batches, _MG_CAPACITY)
-
-    summaries = grams.mapInPandas(summarize, schema="gram string, est long")
     return (
-        summaries.groupBy("gram")
-        .agg(F.sum("est").alias("est_count"))
+        _mg_estimates(grams, "gram", None, _MG_CAPACITY)
+        .select("gram", F.col("est").alias("est_count"))
         .orderBy(F.desc("est_count"), "gram")
         .limit(_TOPK_GRAMS)
     )
@@ -2137,46 +2189,15 @@ ORDER BY exact_count DESC, gram
 
 @register("i17b_topk_bound", oracle=_I17B_ORACLE)
 def i17b_topk_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """i17's sketch made SQL-checkable (the d4b pattern): the Spark side
-    computes the EXACT top-k 2-grams and the Misra-Gries estimates,
-    surfaces the sketch guarantees as booleans — est ≤ exact and
-    exact − est ≤ N/(capacity+1) — and the oracle states the exact
-    counts plus literal TRUE. The booleans hold for ANY partitioning
-    (that is the MG merge theorem), so the row hash is stable even
-    though the underlying estimates are partition-dependent."""
+    """i17's sketch made SQL-checkable: the exact top-k 2-grams with
+    the Misra-Gries guarantees as booleans (``_mg_topk_bound`` with
+    unit weights, so the exact weight is the count and the bound is
+    N/(capacity+1)). The oracle states the exact counts plus literal
+    TRUE."""
     docs = load(spark, sf_dir, "documents")
     grams = docs.select(F.explode(word_shingles("text", 2)).alias("gram"))
-
-    exact = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("exact_count"))
-    w = Window.orderBy(F.desc("exact_count"), "gram")
-    topk = exact.select(
-        "gram", "exact_count", F.row_number().over(w).alias("rk")
-    ).filter(F.col("rk") <= _TOPK_GRAMS)
-
-    def summarize(batches):
-        yield from _mg_partition_summaries(batches, _MG_CAPACITY)
-
-    est = (
-        grams.mapInPandas(summarize, schema="gram string, est long")
-        .groupBy("gram")
-        .agg(F.sum("est").alias("est_count"))
-    )
-    total = grams.agg(F.count(F.lit(1)).alias("n_total"))
-    return (
-        topk.join(est, "gram", "left")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "gram",
-            "exact_count",
-            (F.coalesce("est_count", F.lit(0)) <= F.col("exact_count")).alias(
-                "sketch_never_over"
-            ),
-            (
-                F.col("exact_count") - F.coalesce("est_count", F.lit(0))
-                <= F.col("n_total") / (_MG_CAPACITY + 1)
-            ).alias("sketch_within_bound"),
-        )
-        .orderBy(F.desc("exact_count"), "gram")
+    return _mg_topk_bound(
+        grams, "gram", None, _MG_CAPACITY, _TOPK_GRAMS, "exact_count"
     )
 
 
@@ -2601,34 +2622,6 @@ def i22_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MGW_CAPACITY = 64
 _TOPK_USERS = 10
 
-
-def _mgw_partition_summaries(batches, capacity: int):
-    """Weighted Misra-Gries over one partition's (key, weight) stream:
-    insert at full capacity subtracts the minimum counter from ALL
-    counters (evicting zeros), so each surviving estimate undercounts
-    its true partition weight by at most W_part/(capacity+1) and never
-    overcounts. Integral weights keep every comparison exact."""
-    import pandas as pd
-
-    counters: dict[int, int] = {}
-    for pdf in batches:
-        for key, w in zip(pdf["key"], pdf["w"]):
-            key, w = int(key), int(w)
-            if w <= 0:
-                continue
-            if key in counters or len(counters) < capacity:
-                counters[key] = counters.get(key, 0) + w
-            else:
-                counters[key] = w
-                m = min(counters.values())
-                counters = {
-                    k: v - m for k, v in counters.items() if v > m
-                }
-    yield pd.DataFrame(
-        {"key": list(counters), "est": list(counters.values())}
-    )
-
-
 _I17C_ORACLE = f"""
 WITH w AS (
   SELECT user_id, CAST(FLOOR(value * 10000.0) AS BIGINT) AS w_fp
@@ -2651,53 +2644,17 @@ ORDER BY exact_weight DESC, user_id
 @register("i17c_topk_weighted", oracle=_I17C_ORACLE)
 def i17c_topk_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CH ``topKWeighted(10)(user_id, value)``: heaviest purchase users
-    by TOTAL SPEND, not occurrence count — the weighted Misra-Gries
-    sketch, surfaced SQL-checkably in i17b's style: the Spark side
-    computes the exact top-10 AND the per-partition sketch estimates,
-    then asserts the weighted-MG merge guarantees as booleans (est
-    never exceeds exact; exact − est ≤ total weight/(capacity+1) —
-    both hold for ANY partitioning, so the hash is partition-proof).
-    Weights ride as fixed-point bigints: every sketch comparison and
-    both bound checks are integer-exact. Shuffle carries ≤capacity
-    rows per partition — the mergeable-summary shape."""
+    by TOTAL SPEND, not occurrence count — ``_mg_topk_bound`` with the
+    spend as weight, checked like i17b. Weights ride as fixed-point
+    bigints: every sketch comparison and both bound checks are
+    integer-exact. Shuffle carries ≤capacity rows per partition — the
+    mergeable-summary shape."""
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
-    w = ev.select(
-        F.col("user_id").alias("key"), fixed_point("value").alias("w")
-    )
-    exact = w.groupBy(F.col("key").alias("user_id")).agg(
-        F.sum("w").cast("bigint").alias("exact_weight")
-    )
-    wnd = Window.orderBy(F.desc("exact_weight"), "user_id")
-    topk = exact.select(
-        "user_id", "exact_weight", F.row_number().over(wnd).alias("rk")
-    ).filter(F.col("rk") <= _TOPK_USERS)
-
-    def summarize(batches):
-        yield from _mgw_partition_summaries(batches, _MGW_CAPACITY)
-
-    est = (
-        w.mapInPandas(summarize, schema="key long, est long")
-        .groupBy(F.col("key").alias("user_id"))
-        .agg(F.sum("est").alias("est_weight"))
-    )
-    total = w.agg(F.sum("w").alias("w_total"))
-    return (
-        topk.join(est, "user_id", "left")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "user_id",
-            "exact_weight",
-            (
-                F.coalesce("est_weight", F.lit(0)) <= F.col("exact_weight")
-            ).alias("sketch_never_over"),
-            (
-                F.col("exact_weight") - F.coalesce("est_weight", F.lit(0))
-                <= F.col("w_total") / (_MGW_CAPACITY + 1)
-            ).alias("sketch_within_bound"),
-        )
-        .orderBy(F.desc("exact_weight"), "user_id")
+    w = ev.select("user_id", fixed_point("value").alias("w"))
+    return _mg_topk_bound(
+        w, "user_id", "w", _MGW_CAPACITY, _TOPK_USERS, "exact_weight"
     )
 
 

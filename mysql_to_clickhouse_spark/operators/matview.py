@@ -30,6 +30,7 @@ from mysql_to_clickhouse_spark.functions.numeric import (
     o_fixed_point,
 )
 from mysql_to_clickhouse_spark.registry import register
+from mysql_to_clickhouse_spark.streaming.cdc import EVENTS_FINAL, final
 from mysql_to_clickhouse_spark.tables import load
 
 _CUTOFF = "1997-01-01"  # base MV state = orders before; delta = on/after
@@ -167,9 +168,10 @@ ORDER BY event_type
 @register("k3_mv_cdc_refresh", oracle=_K3_ORACLE)
 def k3_mv_cdc_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed loop a MySQL→ClickHouse deployment actually runs:
-    CDC upserts (a4's ReplacingMergeTree FINAL semantics — latest row
-    per PK, tombstones dropped) feeding a grouped MV. Aggregates over
-    the post-merge image can't be delta-merged blindly (an upsert
+    CDC upserts (the ReplacingMergeTree FINAL image of
+    ``streaming.cdc.EVENTS_FINAL``, as in a4) feeding a grouped MV.
+    Aggregates over the post-merge image can't be delta-merged blindly
+    (an upsert
     RETRACTS the PK's previous contribution), so the refresh
     re-aggregates only the FINAL image — one window + one hash agg —
     never raw history. The oracle recomputes the same thing flat.
@@ -179,15 +181,7 @@ def k3_mv_cdc_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     changed in the batch — h7 is the streaming form of this exact
     maintenance."""
     ev = load(spark, sf_dir, "events")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc(F.unix_micros("ts")), F.desc("event_id")
-    )
-    final = ev.withColumn("rn", F.row_number().over(w)).filter(
-        (F.col("rn") == 1) & (F.col("event_type") != "error")
-    )
-    return final.groupBy("event_type").agg(
+    return final(ev, EVENTS_FINAL).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_users"),
         F.sum(fixed_point("value")).alias("sum_value_fp"),
     )

@@ -15,12 +15,13 @@ import os
 
 from mysql_to_clickhouse_spark.functions.tmputil import scratch_dir
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mysql_to_clickhouse_spark.functions.numeric import dsum, fixed_point, o_dsum
 from mysql_to_clickhouse_spark.registry import register
 from mysql_to_clickhouse_spark.sources.jdbc import chunk_ranges
+from mysql_to_clickhouse_spark.streaming.cdc import BINLOG_FINAL, EVENTS_FINAL, final
 from mysql_to_clickhouse_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -129,29 +130,19 @@ ORDER BY user_id
 
 @register("a4_cdc_apply_latest", oracle=_A4_ORACLE)
 def a4_cdc_apply_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC upsert apply: latest version per PK wins, tombstones drop —
-    exactly ClickHouse ReplacingMergeTree + FINAL read semantics
-    (events stand in for the binlog stream; user_id = PK, ts = version,
-    event_type 'error' = delete marker).
+    """CDC upsert apply: the ClickHouse ReplacingMergeTree + FINAL read
+    of events as a row-image stream, by ``streaming.cdc.EVENTS_FINAL``.
 
     One shuffle by PK at any scale; at 100 TB this runs per
     time-partition so only touched partitions re-merge (the h7
     streaming form does exactly that per micro-batch)."""
     ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc(F.unix_micros("ts")), F.desc("event_id")
-    )
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("event_type") != "error"))
-        .select(
-            "user_id",
-            "event_id",
-            F.unix_micros("ts").alias("ts_us"),
-            "event_type",
-            "value",
-        )
-        
+    return final(ev, EVENTS_FINAL).select(
+        "user_id",
+        "event_id",
+        F.unix_micros("ts").alias("ts_us"),
+        "event_type",
+        "value",
     )
 
 
@@ -2028,7 +2019,11 @@ def a35_binlog_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode+apply half is the whole job. Scale: decode parallelism is
     per rotation file (a deployment rotates at ~1 GiB, so a day's
     backlog is hundreds of independent decode tasks); the apply is one
-    PK exchange, identical to a4."""
+    PK exchange, identical to a4. The apply is
+    ``streaming.cdc.BINLOG_FINAL``: latest-wins in LOG order (rotation
+    file name, position, row ordinal), which equals event_id order by
+    construction here, so a divergence from the oracle's event_id rank
+    means the decoder scrambled the wire order."""
     from mysql_to_clickhouse_spark.sources.binlog import read_binlog
 
     tschema, ops = _a35_ops(spark, sf_dir)
@@ -2041,17 +2036,8 @@ def a35_binlog_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["user_id", "event_id", "ts_us", "event_type", "value"],
         ["long", "long", "long", "string", "double"],
     )
-    # latest-wins in LOG order: rotation file name, position, row
-    # ordinal — which equals event_id order by construction here (the
-    # oracle ranks on event_id; a divergence means the decoder
-    # scrambled the wire order).
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("log_file"), F.desc("log_pos"), F.desc("seq")
-    )
-    return (
-        decoded.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "delete"))
-        .select("user_id", "event_id", "ts_us", "event_type", "value")
+    return final(decoded, BINLOG_FINAL).select(
+        "user_id", "event_id", "ts_us", "event_type", "value"
     )
 
 

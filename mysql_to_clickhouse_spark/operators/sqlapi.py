@@ -903,9 +903,9 @@ ORDER BY event_type
 @register("s13e_ch_dialect_final", oracle=_S13E_ORACLE, tier="T2")
 def s13e_ch_dialect_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CH STATEMENT idioms a migrating user carries in every query:
-    ``FROM events FINAL`` (ReplacingMergeTree read semantics — expanded
-    by the dialect layer into the a4 latest-per-key collapse from the
-    table's registered FinalSpec) and ``PREWHERE`` (merged into WHERE;
+    ``FROM events FINAL`` (ReplacingMergeTree read semantics — the
+    dialect layer renders ``streaming.cdc.EVENTS_FINAL``, the rule a4
+    applies, as a window subquery) and ``PREWHERE`` (merged into WHERE;
     Spark's own predicate pushdown already does what PREWHERE asks for
     by hand), composed with the dialect aggregates on top. The oracle
     restates the collapse as a DuckDB window CTE — hash equality proves

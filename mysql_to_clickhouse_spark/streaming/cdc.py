@@ -3,11 +3,30 @@ loop as a real Structured Streaming job (SURVEY.md §3.1 entry point 2).
 
 readStream(event slices) → writeStream.foreachBatch(merge) with
 versioned parquet state: each micro-batch unions into the previous
-committed state and keeps the latest row per PK (a4 semantics),
-committing a new state version directory — never overwriting the one
-being read (read-then-overwrite of the same path is the classic
-self-clobber). Tombstones ('error' events) are retained in state and
-filtered on read, exactly ReplacingMergeTree + FINAL.
+committed state and keeps the latest row per PK, committing a new
+state version directory — never overwriting the one being read
+(read-then-overwrite of the same path is the classic self-clobber).
+Tombstones are retained in state and filtered on read, exactly
+ReplacingMergeTree + FINAL.
+
+ONE FINAL RULE PER TABLE: a ``FinalSpec`` names a replicated table's
+keys, its version expressions (highest first) and its delete
+predicate. ``collapse`` keeps the latest row per key with tombstones
+(the merge), ``drop_deleted`` filters tombstones out (the read of a
+collapsed state) and ``final`` does both (the read of raw row images).
+Every merge, read and ``FROM … FINAL`` expansion of the engine runs
+through one of three specs:
+
+- ``EVENTS_FINAL`` — the ``events`` table as a CDC stream: key
+  ``user_id``, versions ``unix_micros(ts)``, ``event_id``;
+  ``event_type = 'error'`` deletes (a4, x17, k3 and CH ``FROM events
+  FINAL``);
+- ``CDC_STATE_FINAL`` — the same rule over the state's columns
+  (``ts_us`` in place of ``ts``): ``make_cdc_apply``,
+  ``read_cdc_state`` and h7;
+- ``BINLOG_FINAL`` — a decoded binlog: versions in log order
+  (``log_file``, ``log_pos``, ``seq``); ``op = 'delete'`` deletes
+  (a35, ``make_binlog_apply`` and ``read_binlog_state``).
 
 EXACTLY-ONCE ON RESTART (the binlog-position analog, SURVEY §3.1
 step 5): the streaming checkpoint WAL pins each micro-batch's offsets,
@@ -58,6 +77,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from typing import NamedTuple
 
 import pyarrow.parquet as pq
 
@@ -70,16 +90,51 @@ from pyspark.sql.types import StructType
 from mysql_to_clickhouse_spark.streaming.replay import write_replay_slices
 
 
-def _latest_per_key(
-    df: DataFrame, order: tuple[str, ...] = ("ts_us", "event_id")
-) -> DataFrame:
-    """Latest row per user_id, newest first by ``order``."""
-    w = Window.partitionBy("user_id").orderBy(*(F.desc(c) for c in order))
+class FinalSpec(NamedTuple):
+    """ReplacingMergeTree semantics for one replicated table: the latest
+    version per key wins, and a winner the delete predicate marks is a
+    tombstone."""
+
+    keys: tuple[str, ...]
+    versions: tuple[str, ...]  # SQL expressions, highest first, each DESC
+    deleted: str | None = None  # SQL predicate marking a tombstone
+
+
+EVENTS_FINAL = FinalSpec(
+    ("user_id",), ("unix_micros(ts)", "event_id"), "event_type = 'error'"
+)
+CDC_STATE_FINAL = FinalSpec(
+    ("user_id",), ("ts_us", "event_id"), "event_type = 'error'"
+)
+BINLOG_FINAL = FinalSpec(
+    ("user_id",), ("log_file", "log_pos", "seq"), "op = 'delete'"
+)
+
+
+def collapse(df: DataFrame, spec: FinalSpec) -> DataFrame:
+    """Latest row per ``spec.keys`` by ``spec.versions``, tombstones
+    kept: the merge. A later batch holding an older version of a key
+    must still lose to a tombstone, so state keeps them."""
+    w = Window.partitionBy(*spec.keys).orderBy(
+        *(F.expr(v).desc() for v in spec.versions)
+    )
     return (
         df.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
+
+
+def drop_deleted(df: DataFrame, spec: FinalSpec) -> DataFrame:
+    """``df`` without the rows ``spec.deleted`` marks: the read of a
+    state ``collapse`` already merged."""
+    return df if spec.deleted is None else df.filter(~F.expr(spec.deleted))
+
+
+def final(df: DataFrame, spec: FinalSpec) -> DataFrame:
+    """The ``FINAL`` image of raw row versions: ``collapse``, then
+    ``drop_deleted``."""
+    return drop_deleted(collapse(df, spec), spec)
 
 
 def _committed_versions(state_root: str) -> list[int]:
@@ -146,11 +201,11 @@ def _read_latest(spark: SparkSession, state_root: str) -> DataFrame:
 
 
 def _merge_commit(
-    state_root: str, batch: DataFrame, batch_id: int, order: tuple[str, ...]
+    state_root: str, batch: DataFrame, batch_id: int, spec: FinalSpec
 ) -> None:
     """Union ``batch`` into the largest committed version strictly below
     ``batch_id`` (so a re-delivered batch never reads its own partial
-    output), keep the latest row per key by ``order``, and write the
+    output), ``collapse`` it by ``spec``, and write the
     result with overwrite to ``v{batch_id}``. A union that fits one
     partition is merged in one."""
     prior = [v for v in _committed_versions(state_root) if v < batch_id]
@@ -159,7 +214,7 @@ def _merge_commit(
         batch = prev.unionByName(batch)
     est = batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     batch = _one_partition_if_small(batch, int(est))
-    _latest_per_key(batch, order).write.mode("overwrite").parquet(
+    collapse(batch, spec).write.mode("overwrite").parquet(
         os.path.join(state_root, f"v{batch_id}")
     )
 
@@ -180,7 +235,7 @@ def make_cdc_apply(state_root: str, fail_at_batch: int | None = None):
             "event_type",
             "value",
         )
-        _merge_commit(state_root, batch, batch_id, ("ts_us", "event_id"))
+        _merge_commit(state_root, batch, batch_id, CDC_STATE_FINAL)
 
     return apply_batch
 
@@ -211,9 +266,9 @@ def start_cdc_query(
 
 def read_cdc_state(spark: SparkSession, state_root: str) -> DataFrame:
     """FINAL read of the latest committed state version: latest
-    non-tombstone row per PK."""
-    final = _read_latest(spark, state_root)
-    return final.filter(F.col("event_type") != "error").select(
+    non-tombstone row per PK (``CDC_STATE_FINAL``)."""
+    state = drop_deleted(_read_latest(spark, state_root), CDC_STATE_FINAL)
+    return state.select(
         "user_id", "event_id", "ts_us", "event_type", "value"
     )
 
@@ -249,15 +304,14 @@ _BINLOG_COLS = [
 
 
 def make_binlog_apply(state_root: str):
-    """foreachBatch merge for a decoded binlog stream: latest row per
-    PK in LOG order, deletes kept as tombstones in state (filtered on
-    read — ReplacingMergeTree + FINAL). Same idempotent v{batch_id}
-    commit protocol as make_cdc_apply."""
+    """foreachBatch merge for a decoded binlog stream by
+    ``BINLOG_FINAL``: latest row per PK in LOG order, deletes kept as
+    tombstones in state (filtered on read). Same idempotent
+    v{batch_id} commit protocol as make_cdc_apply."""
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         _merge_commit(
-            state_root, batch.select(*_BINLOG_COLS), batch_id,
-            ("log_file", "log_pos", "seq"),
+            state_root, batch.select(*_BINLOG_COLS), batch_id, BINLOG_FINAL
         )
 
     return apply_batch
@@ -265,8 +319,8 @@ def make_binlog_apply(state_root: str):
 
 def read_binlog_state(spark: SparkSession, state_root: str) -> DataFrame:
     """FINAL read over the binlog-apply state: latest committed
-    version, tombstones dropped."""
-    final = _read_latest(spark, state_root)
-    return final.filter(F.col("op") != "delete").select(
+    version, tombstones dropped (``BINLOG_FINAL``)."""
+    state = drop_deleted(_read_latest(spark, state_root), BINLOG_FINAL)
+    return state.select(
         "user_id", "event_id", "ts_us", "event_type", "value"
     )

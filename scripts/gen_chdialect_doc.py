@@ -32,8 +32,8 @@ docstring for the full rationale):
   expression costs (no Python, full whole-stage codegen; plan-asserted
   in tests/test_chdialect.py). `ch_sql` registers only the names its
   translated statement calls (and the names their bodies call);
-  `register_ch_functions(spark)` registers every one, for plain
-  `spark.sql` text.
+  `register_ch_functions(spark)` registers every one the session
+  catalog lacks, for plain `spark.sql` text.
 - **translation** — aggregate names, -If combinators, the parametric
   `quantile(p)(x)` shape, `multiIf`, and typed casts cannot be
   registered (Spark SQL UDFs reject aggregate bodies); `ch_sql`

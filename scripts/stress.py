@@ -10,12 +10,13 @@ Usage: python scripts/stress.py [--rows 1000000]
 from __future__ import annotations
 
 import argparse
-import hashlib
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from scripts.drive_contract import value_hash  # noqa: E402
 
 QUERIES = [
     "d35_retention",
@@ -129,17 +130,6 @@ def synth_events_spark(spark, path: str, n_rows: int) -> None:
         ).alias("props"),
     )
     df.write.mode("overwrite").parquet(path)
-
-
-def value_hash(pdf) -> str:
-    import pandas as pd
-
-    pdf = pdf[sorted(pdf.columns)].copy()
-    for c in pdf.columns:
-        if pd.api.types.is_datetime64_any_dtype(pdf[c]):
-            pdf[c] = pdf[c].astype("datetime64[us]")
-    rows = sorted(tuple(str(v) for v in row) for row in pdf.itertuples(index=False))
-    return hashlib.md5(repr(rows).encode()).hexdigest()
 
 
 def main() -> None:

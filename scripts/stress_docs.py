@@ -48,7 +48,6 @@ heap) — 48g is comfortable for 1e8 docs at --words 12.
 from __future__ import annotations
 
 import argparse
-import hashlib
 import os
 import shutil
 import sys
@@ -56,18 +55,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from scripts.drive_contract import value_hash  # noqa: E402
+
 VOCAB = 1_000_000
-
-
-def value_hash(pdf) -> str:  # driver-style (scripts/stress.py twin)
-    import pandas as pd
-
-    pdf = pdf[sorted(pdf.columns)].copy()
-    for c in pdf.columns:
-        if pd.api.types.is_datetime64_any_dtype(pdf[c]):
-            pdf[c] = pdf[c].astype("datetime64[us]")
-    rows = sorted(tuple(str(v) for v in row) for row in pdf.itertuples(index=False))
-    return hashlib.md5(repr(rows).encode()).hexdigest()
 
 
 def synth_docs_spark(spark, path: str, n_docs: int, words: int, hot: int) -> dict:

@@ -40,7 +40,6 @@ Usage: python scripts/stress_vectors.py --vectors 1000000
 from __future__ import annotations
 
 import argparse
-import hashlib
 import os
 import shutil
 import sys
@@ -48,22 +47,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from scripts.drive_contract import value_hash  # noqa: E402
+
 DIM = 64
 EPS = 0.1
 K_SERVE = 5
 IVF_CELLS = 256
 IVF_NPROBE = 2
-
-
-def value_hash(pdf) -> str:  # driver-style (scripts/stress_docs.py twin)
-    import pandas as pd
-
-    pdf = pdf[sorted(pdf.columns)].copy()
-    for c in pdf.columns:
-        if pd.api.types.is_datetime64_any_dtype(pdf[c]):
-            pdf[c] = pdf[c].astype("datetime64[us]")
-    rows = sorted(tuple(str(v) for v in row) for row in pdf.itertuples(index=False))
-    return hashlib.md5(repr(rows).encode()).hexdigest()
 
 
 def synth_vectors_spark(spark, path: str, n: int, k_clusters: int) -> None:

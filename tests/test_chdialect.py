@@ -1625,17 +1625,12 @@ def test_explain_statement_routed():
 
 @contextlib.contextmanager
 def _ch_functions_dropped(spark, names=tuple(_SCALAR_UDFS)):
-    """Drop ``names`` from the session catalog and forget the whole-set
-    registration for the block, yielding the list of function names
-    each CREATE issued through ``spark.sql`` names; afterwards the
-    catalog and the whole-set flag are put back as they were."""
+    """Drop ``names`` from the session catalog for the block, yielding
+    the list of function names each CREATE issued through ``spark.sql``
+    names; afterwards the catalog is put back as it was."""
     import re
 
-    from mysql_to_clickhouse_spark.functions.chdialect import _REGISTERED
-
     had = {n for n in _SCALAR_UDFS if spark.catalog.functionExists(n)}
-    was_registered = spark in _REGISTERED
-    _REGISTERED.discard(spark)
     for n in names:
         spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {n}")
     real_sql = spark.sql
@@ -1662,8 +1657,6 @@ def _ch_functions_dropped(spark, names=tuple(_SCALAR_UDFS)):
                 )
             elif n not in had and exists:
                 spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {n}")
-        if was_registered:
-            _REGISTERED.add(spark)
 
 
 def test_ch_sql_without_ch_calls_registers_nothing(spark):
@@ -1731,6 +1724,17 @@ def test_register_ch_functions_registers_all(spark):
         missing = [n for n in _SCALAR_UDFS if not spark.catalog.functionExists(n)]
     assert sorted(created) == sorted(_SCALAR_UDFS) and len(created) == 166
     assert missing == []
+
+
+def test_register_ch_functions_restores_dropped_name(spark):
+    """The session catalog is the only record of what is registered: a
+    CH name dropped after a full registration comes back on the next
+    call, and only that name is created."""
+    register_ch_functions(spark)
+    with _ch_functions_dropped(spark, names=("toYYYYMM",)) as created:
+        register_ch_functions(spark)
+        assert spark.catalog.functionExists("toYYYYMM")
+    assert created == ["toYYYYMM"]
 
 
 _CH_TEXT_ENTRIES = [

@@ -441,3 +441,57 @@ def test_final_read_builds_without_spark_job(spark, tmp_path):
         for replay in replays:
             for batch_id in range(len(batches)):
                 assert finals[replay, batch_id] == finals[None, batch_id]
+
+
+def test_cdc_out_of_order_versions_across_batches(spark, tmp_path):
+    """Versions arrive out of order across micro-batches: a newer
+    tombstone delivered before an older upsert keeps its key deleted,
+    and a newer upsert delivered after an older tombstone revives its
+    key. Only state that keeps tombstones gets both right; the FINAL
+    read equals ``final()`` over everything delivered."""
+    from datetime import datetime, timedelta
+
+    from pyspark.sql import functions as F
+
+    from mysql_to_clickhouse_spark.streaming.cdc import (
+        CDC_STATE_FINAL,
+        final,
+        make_cdc_apply,
+        read_cdc_state,
+    )
+
+    schema = (
+        "user_id long, event_id long, ts timestamp, event_type string, "
+        "value double"
+    )
+    old, new = datetime(2024, 1, 1), datetime(2024, 1, 1) + timedelta(hours=1)
+    batches = [
+        [
+            (1, 11, new, "error", 0.0),  # key 1: newer tombstone first
+            (2, 21, old, "error", 0.0),  # key 2: older tombstone first
+            (3, 31, old, "view", 1.0),
+        ],
+        [
+            (1, 12, old, "view", 2.5),  # older upsert: stays deleted
+            (2, 22, new, "click", 3.5),  # newer upsert: revives
+            (3, 32, new, "view", 4.0),
+        ],
+    ]
+    frames = [spark.createDataFrame(rows, schema) for rows in batches]
+    root = str(tmp_path / "state")
+    os.makedirs(root)
+    apply = make_cdc_apply(root)
+    for batch_id, batch in enumerate(frames):
+        apply(batch, batch_id)
+
+    got = sorted(map(tuple, read_cdc_state(spark, root).collect()))
+    delivered = frames[0].unionByName(frames[1]).select(
+        "user_id",
+        "event_id",
+        F.unix_micros("ts").alias("ts_us"),
+        "event_type",
+        "value",
+    )
+    want = sorted(map(tuple, final(delivered, CDC_STATE_FINAL).collect()))
+    assert got == want
+    assert [(r[0], r[1]) for r in got] == [(2, 22), (3, 32)]
